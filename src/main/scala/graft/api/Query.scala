@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.catalog.GraftTable
+import graft.operators.TopN
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,24 +69,15 @@ final case class Query(df: DataFrame, keyCols: Seq[String]) {
   def sampleN(n: Int, seed: Long = 0L): Query =
     copy(df = df.orderBy(sampleKey(seed)).limit(n))
 
-  /** Repeatable stratified sample: n rows per stratum, two-phase so no
-    * single task ever sorts a whole stratum. Phase 1 ranks within
-    * (stratum, salt) — `saltBuckets`× the parallelism of a per-stratum
-    * window — keeping n rows per salted group; phase 2 ranks the surviving
-    * ≤ saltBuckets·n rows per stratum. Top-n-of-union == global top-n, and
-    * the salt is derived from the sample key so tied keys stay together.
+  /** Repeatable stratified sample: the n rows with the lowest md5 sample
+    * keys per stratum, through `TopN.perGroup`. The key is uniform hex, so
+    * a stratum's n lowest keys sit below a short hex prefix: one probe
+    * picks the smallest cutoff under which every stratum has n rows (or
+    * all of its rows), and only the rows under it are shuffled and ranked.
     */
-  def sampleStratified(n: Int, stratifyBy: Seq[Column], seed: Long = 0L,
-      saltBuckets: Int = 64): Query = {
-    val key = sampleKey(seed)
-    val salt = pmod(crc32(key), lit(saltBuckets))
-    val w1 = Window.partitionBy((stratifyBy :+ salt): _*).orderBy(key)
-    val pre = df.withColumn("_rk", row_number().over(w1))
-      .filter(col("_rk") <= n).drop("_rk")
-    val w2 = Window.partitionBy(stratifyBy: _*).orderBy(key)
-    copy(df = pre.withColumn("_rk", row_number().over(w2))
-      .filter(col("_rk") <= n).drop("_rk"))
-  }
+  def sampleStratified(n: Int, stratifyBy: Seq[Column], seed: Long = 0L): Query =
+    copy(df = TopN.perGroup(df, stratifyBy, Seq(sampleKey(seed)), n,
+      cutoffs = Seq("008", "08", "8")).drop(TopN.RankCol))
 
   /** Repeatable stratified FRACTION sample (reference `fraction` +
     * `stratify_by`, `exec/sql_node.py:848-895`): each stratum contributes
@@ -101,8 +93,7 @@ final case class Query(df: DataFrame, keyCols: Seq[String]) {
     * bucket). The per-(stratum, bucket) count table is tiny
     * (|strata|·256), its prefix sums are a window over that tiny table,
     * and it broadcast-joins back — so no task ever sorts more than one
-    * (stratum, bucket) slice, exactly the q13/q17 salting discipline but
-    * with an ORDERED salt so ranks compose.
+    * (stratum, bucket) slice: a salt that is ORDERED, so ranks compose.
     *
     * Ties (duplicate sample keys) get an arbitrary but count-exact order,
     * same as the reference's `row_number`.

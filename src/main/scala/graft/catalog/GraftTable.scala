@@ -649,7 +649,7 @@ final class GraftTable private (
       // unversioned tables. Commits as its own version, like the reference.
       val missingRows =
         if (ifNotExists != "insert") Seq.empty
-        else updRows.filter(r => !matchedKeys.contains(keyIdx.map(i => r.get(i))))
+        else updRows.filter(r => !matchedKeys.contains(joinKey(keyIdx.map(i => r.get(i)))))
       val merged =
         if (missingRows.isEmpty) st
         else {
@@ -703,6 +703,19 @@ final class GraftTable private (
     }.reduce(_ && _)
   }
 
+  /** A driver-side key tuple with the join's equality: binary values
+    * compare by content, -0.0 equals 0.0 and NaN equals NaN (Spark
+    * normalizes floating-point join keys the same way).
+    */
+  private def joinKey(t: Seq[Any]): Seq[Any] = t.map {
+    case b: Array[Byte] => b.toSeq
+    case d: Double => if (d.isNaN) JoinKeyNaN else if (d == 0.0) 0.0 else d
+    case f: Float => if (f.isNaN) JoinKeyNaN else if (f == 0.0f) 0.0f else f
+    case v => v
+  }
+
+  private case object JoinKeyNaN
+
   /** Runs the COW update. Returns the status plus the set of update key
     * tuples that matched a live row (the upsert leg's complement). The ONE
     * probe scan inside answers both the `ifNotExists` decision and the COW
@@ -724,7 +737,7 @@ final class GraftTable private (
     val v = m.currentVersion + 1
     val setCols = updates.columns.filterNot(keyCols.contains).toSeq
     require(setCols.nonEmpty, "batchUpdate needs at least one non-key column")
-    val distinctTuples = updKeyTuples.distinct.toSet
+    val distinctTuples = updKeyTuples.map(joinKey).toSet
     val files = m.activeFiles(m.currentVersion)
     // ONE key-list-pruned probe: live rows matching the per-column isin
     // predicates, with their exact key tuple and containing file
@@ -738,12 +751,12 @@ final class GraftTable private (
     // exact tuple membership decided here (the isin conjunction over-
     // selects composite keys)
     val exact = probe.iterator
-      .map(r => (r.getString(0), Seq.tabulate(keyCols.length)(i => r.get(i + 1))))
+      .map(r => (r.getString(0), joinKey(Seq.tabulate(keyCols.length)(i => r.get(i + 1)))))
       .filter { case (_, t) => distinctTuples.contains(t) }
       .toSeq
     val matchedKeys = exact.map(_._2).toSet
     if (ifNotExists == "error") {
-      val nMissing = updKeyTuples.count(t => !matchedKeys.contains(t))
+      val nMissing = updKeyTuples.count(t => !matchedKeys.contains(joinKey(t)))
       if (nMissing > 0) throw new NoSuchElementException(
         s"batch_update(): $nMissing row(s) not found")
     }

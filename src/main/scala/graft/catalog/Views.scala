@@ -258,25 +258,35 @@ object Views {
   // version in it is a row-closing rewrite (delete/update/batch_update/
   // recompute with files added), and can only contain FRESH rows (_v_min in
   // the window) if some version is a row-opening write (insert, or the
-  // rewritten halves of update/batch_update/recompute). compact copies rows
-  // byte-identical (no new _v_min/_v_max values beyond what their own ops
-  // already put in the window) and add/drop/rename_column never touch row
-  // visibility. Unversioned bases squash their log, so the guards stay
-  // conservatively permissive there and the data probes run as before.
+  // rewritten halves of update/batch_update/recompute). The probes are
+  // skipped only for ops known not to change row visibility: compact copies
+  // rows byte-identical (no new _v_min/_v_max values beyond what their own
+  // ops already put in the window) and create and add/drop/rename_column
+  // never touch it. Any other op counts as both closing and opening.
+  // Unversioned bases squash their log, so the guards stay conservatively
+  // permissive there and the data probes run as before.
 
   private val closingOps = Set("delete", "update", "batch_update", "recompute")
   private val openingOps = Set("insert", "update", "batch_update", "recompute")
+  private val neutralOps =
+    Set("create", "compact", "add_column", "drop_column", "rename_column")
 
   private def opsIn(base: GraftTable, lastSeen: Long,
-      ops: Set[String]): Boolean = {
+      matches: String => Boolean): Boolean = {
     val m = base.meta
     m.versions.exists(e => e.version > lastSeen &&
-      e.version <= m.currentVersion && e.added.nonEmpty && ops(e.op))
+      e.version <= m.currentVersion && e.added.nonEmpty && matches(e.op))
   }
+
+  private def mayClose(op: String): Boolean =
+    closingOps(op) || !(openingOps(op) || neutralOps(op))
+
+  private def mayOpen(op: String): Boolean =
+    openingOps(op) || !(closingOps(op) || neutralOps(op))
 
   /** false ⇒ provably no closed rows in the window (skip the history scan) */
   private def mightHaveClosedRows(base: GraftTable, lastSeen: Long): Boolean =
-    !base.meta.isVersioned || opsIn(base, lastSeen, closingOps)
+    !base.meta.isVersioned || opsIn(base, lastSeen, mayClose)
 
   /** true ⇒ provably SOME closed rows (skip the isEmpty probe job) */
   private def hasClosedRowsCertainly(base: GraftTable, lastSeen: Long): Boolean =
@@ -284,7 +294,7 @@ object Views {
 
   /** false ⇒ provably no rows with `_v_min` in the window (skip the insert) */
   private def mightHaveFreshRows(base: GraftTable, lastSeen: Long): Boolean =
-    !base.meta.isVersioned || opsIn(base, lastSeen, openingOps)
+    !base.meta.isVersioned || opsIn(base, lastSeen, mayOpen)
 
   private def lastSeenKey(base: GraftTable) = s"__last_seen_base_${base.name}"
   private def epochKey(base: GraftTable) = s"__revert_epoch_base_${base.name}"

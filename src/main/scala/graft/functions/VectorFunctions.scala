@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.TopN
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -63,30 +64,16 @@ object VectorFunctions {
     *
     * `queries` must be broadcast-sized (it is the parameter set, not data).
     *
-    * Two-phase salted rank (the q13/q17 pattern): a window over `queryId`
-    * alone would shuffle the whole corpus×queries product into Q partitions
-    * and sort ALL N corpus rows in one task per query — a full-corpus
-    * single-task sort at 100 TB. Phase 1 ranks per (queryId, salt) — the
-    * salt derived from the corpus id, so `saltBuckets`× the parallelism —
-    * keeping k rows per salted group; phase 2 ranks the surviving
-    * ≤ saltBuckets·k rows per query. Every true top-k row wins its own
-    * salt group, so top-k-of-union == global top-k exactly.
+    * The rank is `TopN.perGroup` without cutoffs: Catalyst keeps each map
+    * task's top k per query (`WindowGroupLimit` `Partial`) before the
+    * exchange on `queryId`, so no task sorts the whole corpus. Output:
+    * (queryId, corpusId, `_score`, `_rk`).
     */
   def topKPerQuery(corpus: DataFrame, corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      saltBuckets: Int = 64): DataFrame = {
-    val score = cosineSimilarity(col(corpusVec), col(queryVec))
-    val salt = pmod(crc32(col(corpusId).cast("string")), lit(saltBuckets))
-    val wPre = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryId), salt).orderBy(score.desc, col(corpusId))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryId)).orderBy(score.desc, col(corpusId))
-    corpus.crossJoin(broadcast(queries))
-      .withColumn("_prk", row_number().over(wPre))
-      .filter(col("_prk") <= k)
-      .drop("_prk")
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col(queryId), col(corpusId), score.as("_score"), col("_rk"))
+      queries: DataFrame, queryId: String, queryVec: String, k: Int): DataFrame = {
+    val scored = corpus.crossJoin(broadcast(queries)).select(col(queryId), col(corpusId),
+      cosineSimilarity(col(corpusVec), col(queryVec)).as("_score"))
+    TopN.perGroup(scored, Seq(col(queryId)), Seq(col("_score").desc, col(corpusId)), k)
+      .withColumnRenamed(TopN.RankCol, "_rk")
   }
 }

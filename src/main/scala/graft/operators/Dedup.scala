@@ -4,6 +4,7 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** End-to-end deduplication operators for document corpora — the user-facing
   * API over the primitives in `TextFunctions` (north-star op family,
@@ -225,6 +226,10 @@ object Dedup {
       tau: Double, k: Int = 16, maxIter: Int = 10,
       exact: Boolean = true, saltFactor: Int = 8): DataFrame = {
     require(saltFactor >= 1, s"bad saltFactor $saltFactor")
+    // the pair kernel works on long ids; only integral ids survive that
+    val idType = df.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"semanticNearDupPairs needs an integral id column, got $idCol: ${idType.sql}")
     val spark = df.sparkSession
     val ivf = ExactAnn.build(df, vecCol, idCol, k, maxIter)
     val assigned = KMeans.assign(
@@ -252,7 +257,6 @@ object Dedup {
     //    oracle-exact cosine formula — exactness never rests on
     //    normalize-then-dot rounding (a reordered kernel sum moves the dot
     //    by ulps, orders of magnitude inside the cushion).
-    val idType = df.schema(idCol).dataType
     val thr = tau - 1e-6
     val candByCluster: Map[Int, Seq[Int]] =
       cand.groupBy(_._1).map { case (i, ps) => i -> ps.map(_._2) }

@@ -1544,12 +1544,12 @@ object Pipeline {
         // DIFFERENT label — the negative sampler that builds contrastive
         // training pairs for embedding models. Probes are a broadcast
         // parameter set (never data-sized); scores are one map-side pass of
-        // the fused native cosine kernel; per-probe top-k uses the
-        // q13/topKPerQuery two-phase salted rank so no task ever sorts the
-        // whole corpus. Ranks are taken over ROUNDED scores with a vec_id
-        // tiebreak (the q110 lesson: raw-double ranks flip on engine ulp
-        // differences).
-        import org.apache.spark.sql.expressions.Window
+        // the fused native cosine kernel; the per-probe top-k is
+        // `TopN.perGroup`, whose map-side group limit keeps any task from
+        // sorting the whole corpus. Ranks are taken over ROUNDED scores
+        // with a vec_id tiebreak (the q110 lesson: raw-double ranks flip on
+        // engine ulp differences).
+        import graft.operators.TopN
         val emb = T(s, dir, "embeddings")
         val probes = broadcast(emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("probe_id"),
@@ -1561,17 +1561,9 @@ object Pipeline {
           .join(probes, col("label") =!= col("probe_label"))
           .select(col("probe_id"), col("vec_id"),
             round(cosine(s, col("e"), col("pe")), 6).as("cos_sim"))
-        val salt = pmod(crc32(col("vec_id").cast("string")), lit(64))
-        val wPre = Window.partitionBy(col("probe_id"), salt)
-          .orderBy(col("cos_sim").desc, col("vec_id"))
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))
-        scored
-          .withColumn("_prk", row_number().over(wPre))
-          .filter(col("_prk") <= 5).drop("_prk")
-          .withColumn("rk", row_number().over(w).cast("long"))
-          .filter(col("rk") <= 5)
-          .select(col("probe_id"), col("vec_id"), col("cos_sim"), col("rk"))
+        TopN.perGroup(scored, Seq(col("probe_id")), Seq(col("cos_sim").desc, col("vec_id")), 5)
+          .select(col("probe_id"), col("vec_id"), col("cos_sim"),
+            col(TopN.RankCol).cast("long").as("rk"))
           .transform(graft.QueryUtil.orderedSmall(_, col("probe_id"), col("rk")))
       },
       Some("""WITH p AS (SELECT vec_id AS probe_id, label AS probe_label,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables => T}
+import graft.operators.TopN
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -254,38 +255,17 @@ object Relational {
       (s, dir) => {
         // Order on enough columns that tied rows are identical in every
         // output-relevant column (lag/lead read l_quantity, which is a key).
-        //
-        // Scale shape: l_returnflag has 3 distinct values, so a direct
-        // per-flag window sorts the whole table in ≤3 tasks regardless of
-        // cluster size, and the former salted two-phase top-501 still
-        // shuffled and sorted EVERY row (r16, guide §2.3: shuffle fewer
-        // bytes). The window order leads with l_orderkey, so a bound B with
-        // ≥501 rows per flag at l_orderkey ≤ B provably contains every
-        // rank-≤501 row (any row beyond B is outranked by those 501; rank
-        // 501 is what lead() at rank 500 reads). Find B with a cheap
-        // 2-column count probe (map-side agg, no shuffle of data rows),
-        // escalating ×8 on the rare undershoot — then the real window runs
-        // on the few-hundred-row remnant and the l_orderkey ≤ B predicate
-        // pushes down to parquet row-group pruning at any corpus size.
+        // lead() at rank 500 reads rank 501, so the top 501 per flag are
+        // ranked and lag/lead then run over that remnant in rank order.
         val orderCols = Seq(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"), col("l_tax"), col("l_shipdate"))
-        val w = Window
-          .partitionBy(col("l_returnflag"))
-          .orderBy(orderCols: _*)
-        var bound = 2048L
-        var boundSafe = false
-        while (!boundSafe) {
-          val c = T(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
-            count(when(col("l_orderkey") <= bound, 1)).as("inB"),
-            count(lit(1)).as("tot")).collect()
-          boundSafe = c.forall(r => r.getLong(1) >= math.min(501L, r.getLong(2)))
-          if (!boundSafe) bound *= 8
-        }
-        T(s, dir, "lineitem")
-          .filter(col("l_orderkey") <= bound)
+        val top = TopN.perGroup(T(s, dir, "lineitem"), Seq(col("l_returnflag")),
+          orderCols, 501, cutoffs = Seq.iterate(2048L, 6)(_ * 8))
+        val w = Window.partitionBy(col("l_returnflag")).orderBy(col(TopN.RankCol))
+        top
           .select(
             col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-            row_number().over(w).cast("long").as("rn"),
+            col(TopN.RankCol).cast("long").as("rn"),
             lag(col("l_quantity"), 1).over(w).as("prev_qty"),
             lead(col("l_quantity"), 1).over(w).as("next_qty"),
           )
@@ -345,34 +325,9 @@ object Relational {
     QueryDef(
       "q17_sample_stratified",
       (s, dir) => {
-        // n-per-stratum repeatable sample: rank by md5 key within stratum.
-        // The md5 key is UNIFORM, so the 10 lowest keys per flag sit far
-        // below any small hex cutoff — filter to key < C first (verified:
-        // a cheap count probe proves every flag has ≥10 rows under C, or
-        // fewer than 10 rows in total; escalate C ×16 on the rare
-        // undershoot), then rank the few-hundred-row remnant (r16, guide
-        // §2.3 — the former salted two-phase rank still shuffled and
-        // sorted every row). Safety: any row with final rank ≤ 10 has one
-        // of the 10 smallest keys of its flag, all of which are < C once
-        // the probe passes.
-        val key = md5Key("7", col("l_orderkey"), col("l_linenumber"))
-        val w = Window
-          .partitionBy(col("l_returnflag"))
-          .orderBy(key)
-        val cutoffs = Seq("008", "08", "8", "g") // ×16 steps; "g" > any hex
-        var ci = 0
-        var cutoffSafe = false
-        while (!cutoffSafe) {
-          val c = T(s, dir, "lineitem").groupBy(col("l_returnflag")).agg(
-            count(when(key < cutoffs(ci), 1)).as("inC"),
-            count(lit(1)).as("tot")).collect()
-          cutoffSafe = c.forall(r => r.getLong(1) >= math.min(10L, r.getLong(2)))
-          if (!cutoffSafe) ci += 1
-        }
-        T(s, dir, "lineitem")
-          .filter(key < cutoffs(ci))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
+        // n-per-stratum repeatable sample: the 10 lowest md5 keys per flag
+        graft.api.Query(T(s, dir, "lineitem"), Seq("l_orderkey", "l_linenumber"))
+          .sampleStratified(10, Seq(col("l_returnflag")), seed = 7).df
           .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))
           .transform(graft.QueryUtil.orderedSmall(_,
             col("l_returnflag"), col("l_orderkey"), col("l_linenumber")))

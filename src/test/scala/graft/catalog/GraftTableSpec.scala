@@ -189,6 +189,22 @@ class GraftTableSpec extends AnyFunSuite {
     assert(t.read(Some(1L)).filter("id = 1").head().getAs[Double]("score") == 1.0) // history
   }
 
+  test("batchUpdate matches binary, -0.0 and NaN keys like the join does") {
+    val t = GraftTable.create(spark, freshCatalog(), "t9b", Seq(
+      ColumnDef("k", "binary"), ColumnDef("d", "double"), ColumnDef("v", "bigint")))
+    t.insert(Seq((Array[Byte](1, 2), 0.0, 1L), (Array[Byte](3), 1.5, 2L),
+      (Array[Byte](4), Double.NaN, 3L)).toDF("k", "d", "v"))
+    t.batchUpdate(Seq((Array[Byte](1, 2), 10L), (Array[Byte](3), 20L)).toDF("k", "v"),
+      Seq("k"))
+    t.batchUpdate(Seq((-0.0, 30L), (Double.NaN, 40L)).toDF("d", "v"), Seq("d"))
+    assert(t.read().orderBy("v").select("v").as[Long].collect().toSeq ==
+      Seq(20L, 30L, 40L))
+    // upsert: a key that matches by content is updated, not inserted again
+    t.batchUpdate(Seq((Array[Byte](3), 5.0, 40L)).toDF("k", "d", "v"), Seq("k"),
+      ifNotExists = "insert")
+    assert(t.read().count() == 3)
+  }
+
   test("delete rewrites only files containing matching rows") {
     val t = GraftTable.create(spark, freshCatalog(), "t10", cols)
     t.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "score"))

@@ -89,6 +89,25 @@ class ViewsSpec extends AnyFunSuite {
     assert(view.read().count() == 4)
   }
 
+  test("sync treats an unknown op as closing and opening rows") {
+    val cat = freshCatalog()
+    val t = GraftTable.create(spark, cat, "docs_unk", cols)
+    t.insert(Seq((1L, "a b"), (2L, "x y z")).toDF("id", "text"))
+    val view = Views.createComponentView(spark, cat, "tokens_unk", t,
+      "split(text, '\\\\s+')", "token", "string", Seq(ColumnDef("id", "bigint")))
+    t.delete("id = 2")
+    // relabel the delete as an op the guards do not know; its added files
+    // still close rows
+    val m = t.meta
+    val last = m.versions.last
+    assert(last.op == "delete" && last.added.nonEmpty)
+    assert(cat.commit(m.commitSeq,
+      m.copy(versions = m.versions.init :+ last.copy(op = "future_op"))))
+    Views.syncComponentView(view, t, "split(text, '\\\\s+')", "token", Seq("id"))
+    assert(view.read().filter("id = 2").count() == 0)
+    assert(view.read().count() == 2)
+  }
+
   test("materialized predicate view syncs inserts, updates, deletes") {
     val cat = freshCatalog()
     val t = GraftTable.create(spark, cat, "docs5", Seq(

@@ -16,14 +16,14 @@ class VectorFunctionsSpec extends AnyFunSuite {
       java.nio.ByteBuffer.wrap(h).getInt() / Int.MaxValue.toDouble
     }
 
-  test("topKPerQuery salted two-phase equals the naive global window") {
+  test("topKPerQuery equals the naive global window") {
     val corpus = (10L until 400L).map(i => i -> vec(i)).toDF("cid", "ce")
     val queries = (0L until 5L).map(i => i -> vec(i)).toDF("qid", "qe")
     val got = VectorFunctions
       .topKPerQuery(corpus, "cid", "ce", queries, "qid", "qe", 3)
       .orderBy(col("qid"), col("_rk"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
-    // naive reference: one window over qid alone (the shape we replaced)
+    // naive reference: the flat per-query window
     val score = VectorFunctions.cosineSimilarity(col("ce"), col("qe"))
     val w = Window.partitionBy(col("qid")).orderBy(score.desc, col("cid"))
     val naive = corpus.crossJoin(broadcast(queries))
@@ -35,16 +35,18 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(got == naive)
   }
 
-  test("topKPerQuery plan pre-reduces per salt — no single-task corpus sort") {
+  test("topKPerQuery limits each query's rows map-side, below the first exchange") {
     val corpus = (10L until 200L).map(i => i -> vec(i)).toDF("cid", "ce")
     val queries = (0L until 3L).map(i => i -> vec(i)).toDF("qid", "qe")
     val q = VectorFunctions.topKPerQuery(corpus, "cid", "ce", queries, "qid", "qe", 3)
-    val plan = q.queryExecution.executedPlan.toString
-    // two window stages: the salted pre-reduce plus the final per-query rank
-    val windows = "(?m)^.*Window\\b".r.findAllIn(plan).size
-    assert(windows >= 2, s"expected salted pre-reduce + final window, got plan:\n$plan")
-    // the pre-reduce partitions on (qid, crc32-salt), so the first exchange
-    // must hash on more than the bare query id
-    assert(plan.contains("crc32"), s"salt missing from plan:\n$plan")
+    val lines = q.queryExecution.executedPlan.toString.linesIterator.toSeq
+    val plan = lines.mkString("\n")
+    // each map task keeps its own top 3 per query before the shuffle on qid,
+    // so no task sorts the whole corpus
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    val partial = lines.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val fin = lines.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Final"))
+    assert(exchange >= 0 && fin >= 0 && fin < exchange && partial > exchange,
+      s"expected WindowGroupLimit Final above and Partial below the first exchange:\n$plan")
   }
 }

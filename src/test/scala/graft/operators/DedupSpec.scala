@@ -120,6 +120,14 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("semanticNearDupPairs rejects non-integral ids up front") {
+    val df = Seq(("a", Seq(1.0, 0.0)), ("b", Seq(1.0, 0.01)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Dedup.semanticNearDupPairs(df, "embedding", "vec_id", tau = 0.9, k = 1))
+    assert(e.getMessage.contains("integral id column"), e.getMessage)
+  }
+
   test("separable clusters prune cluster pairs; chains dedup to one keeper") {
     // 4 tight blobs on orthogonal axes: cross-blob cosine ~0, within-blob
     // ~1. At tau=0.9 the triangle-inequality ceiling kills every
