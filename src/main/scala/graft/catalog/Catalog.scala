@@ -53,6 +53,10 @@ object ColumnDef {
   * writes proportional to the files actually touched, not the table.
   * `revert` truncates the log, leaving later files orphaned (exact
   * reference revert semantics, `/root/reference/pixeltable/store.py:514-610`).
+  * `schema` is the Spark schema (JSON) of the `added` files, logged from the
+  * frame the writer wrote, so reads know the files' schema without opening
+  * them. None for entries logged before the field existed: their schema
+  * comes from their files' footers.
   */
 final case class VersionEntry(
     version: Long,
@@ -60,6 +64,7 @@ final case class VersionEntry(
     added: Seq[String],
     removed: Seq[String],
     createdAtMs: Long,
+    schema: Option[String] = None,
 )
 
 /** A declared ANN index over an embedding column, maintained by DML: every
@@ -217,6 +222,7 @@ final class Catalog(val warehouse: String) {
       },
       indexes = Option(m.indexes).getOrElse(Seq.empty),
       layout = Option(m.layout).flatten,
+      versions = m.versions.map(e => e.copy(schema = Option(e.schema).flatten)),
       columns = m.columns.map(c => c.copy(
         comment = Option(c.comment).flatten,
         customMetadata = Option(c.customMetadata).getOrElse(Map.empty),

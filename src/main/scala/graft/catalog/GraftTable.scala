@@ -1,7 +1,9 @@
 package graft.catalog
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A versioned, insertable table with computed columns, MVCC row visibility,
   * snapshots, time travel and revert — the Spark-native equivalent of the
@@ -54,9 +56,44 @@ final class GraftTable private (
   private def storedAt(m: TableMeta, version: Long): DataFrame = {
     val files = m.activeFiles(version)
     if (files.isEmpty) emptyFrame(m)
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
-      .filter(col(VMin) <= version && col(VMax) > version)
+    else readFiles(m, files).filter(col(VMin) <= version && col(VMax) > version)
   }
+
+  /** Stored rows of `files` (manifest paths, physical column names) under
+    * the merge of the schemas their version entries logged — the schema a
+    * `mergeSchema` read would infer, known without a footer-reading job.
+    */
+  private def readFiles(m: TableMeta, files: Seq[String]): DataFrame =
+    spark.read.schema(schemaOf(m, files)).parquet(files: _*)
+
+  /** Merge, in log order, of the schemas of the entries that added `files`
+    * (file order, as a `mergeSchema` read folds; merging a schema again
+    * changes nothing, so repeats are dropped). An entry logged without a
+    * schema takes it from the footers of its files among `files`.
+    */
+  private def schemaOf(m: TableMeta, files: Seq[String]): StructType = {
+    val wanted = files.toSet
+    m.versions.flatMap { e =>
+      val mine = e.added.filter(wanted)
+      if (mine.isEmpty) Nil
+      else e.schema.map(Seq(_)).getOrElse(footers(mine)((_, f) => footerSchema(f).json))
+    }.distinct
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType])
+      .reduce(mergeSchemas)
+  }
+
+  private def mergeSchemas(a: StructType, b: StructType): StructType =
+    org.apache.spark.sql.GraftSchemas.merge(a, b,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+
+  /** Spark schema a footer carries: the schema Spark logged in it, else
+    * the converted parquet schema (as schema inference reads it).
+    */
+  private def footerSchema(f: ParquetMetadata): StructType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(null, f),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   private def emptyFrame(m: TableMeta): DataFrame = {
     val storedCols = m.columns.filter(c => c.computedExpr.isEmpty || c.stored)
@@ -290,23 +327,29 @@ final class GraftTable private (
       val v = m.currentVersion + 1
       // primary-key unique constraint (reference partial B-tree index
       // semantics, index/btree.py: only LIVE rows hold their key, so a
-      // deleted key is immediately reusable). One distributed semi-join
-      // against live keys + one intra-batch groupBy — no driver-side
-      // key sets, so constraint checking scales with the table.
+      // deleted key is immediately reusable). ONE distributed aggregate
+      // over the batch's keys (flag 1) and the live keys (flag 0): a key
+      // held twice is an in-batch duplicate when the batch holds it twice,
+      // else a live conflict; in-batch duplicates sort first. Live keys
+      // with a null part never equi-match, so they stay out. No
+      // driver-side key sets, so constraint checking scales with the table.
       if (m.primaryKey.nonEmpty) {
         val pk = m.primaryKey
-        val batchDup = rows.groupBy(pk.map(col): _*)
-          .agg(count(lit(1)).as("_n")).filter(col("_n") > 1)
+        val liveKeys = read().select(pk.map(col): _*)
+          .filter(pk.map(col(_).isNotNull).reduce(_ && _))
+        val dup = rows.select(pk.map(col): _*).withColumn("_new", lit(1L))
+          .unionByName(liveKeys.withColumn("_new", lit(0L)))
+          .groupBy(pk.map(col): _*)
+          .agg(count(lit(1)).as("_n"), sum(col("_new")).as("_new"))
+          .filter(col("_n") > 1 && col("_new") > 0)
+          .orderBy(col("_new").desc)
           .limit(1).collect()
-        if (batchDup.nonEmpty) throw new IllegalArgumentException(
-          s"Duplicate primary key in inserted rows: " +
-            pk.zip(batchDup.head.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", "))
-        val conflict = rows.select(pk.map(col): _*)
-          .join(read().select(pk.map(col): _*), pk, "left_semi")
-          .limit(1).collect()
-        if (conflict.nonEmpty) throw new IllegalArgumentException(
-          s"Duplicate primary key: " +
-            pk.zip(conflict.head.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", "))
+        dup.headOption.foreach { r =>
+          val what = if (r.getLong(pk.length + 1) > 1) "Duplicate primary key in inserted rows"
+            else "Duplicate primary key"
+          throw new IllegalArgumentException(s"$what: " +
+            pk.zip(r.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", "))
+        }
       }
       var df = rows
       val stored = m.computedInTopoOrder.filter(_.stored)
@@ -320,7 +363,8 @@ final class GraftTable private (
         .withColumn(VMin, lit(v))
         .withColumn(VMax, lit(Live))
       val dir = dataDir(v, "insert")
-      toPhysical(df, m).write.mode("overwrite").parquet(dir)
+      val out = toPhysical(df, m)
+      out.write.mode("overwrite").parquet(dir)
       val files = listParquetFiles(dir)
       insertedFiles = files
       // rowid max from the just-written files' parquet FOOTERS, read on the
@@ -330,7 +374,7 @@ final class GraftTable private (
       // lifecycles run many inserts)
       val maxId = maxLongFromFooters(files, RowId).getOrElse(m.nextRowId - 1)
       commitMetaOrClean(m, m.copy(
-        versions = m.versions :+ entry(v, "insert", files, Seq.empty),
+        versions = m.versions :+ entry(v, "insert", files, Seq.empty, Some(out.schema)),
         nextRowId = maxId + 1), dir)
       v
     }
@@ -351,7 +395,7 @@ final class GraftTable private (
       if (!returnRows || insertedFiles.isEmpty) None
       else {
         val m = meta
-        val back = toLogical(spark.read.parquet(insertedFiles: _*), m)
+        val back = toLogical(readFiles(m, insertedFiles), m)
           .select(m.liveColumns.filter(c => c.computedExpr.isEmpty || c.stored)
             .map(c => col(c.name)): _*)
         val cols = back.columns
@@ -388,8 +432,14 @@ final class GraftTable private (
       val m = meta
       if (m.versions.length > 1) {
         val cur = m.currentVersion
-        commitMeta(m, m.copy(versions = Seq(VersionEntry(cur, "unversioned",
-          m.activeFiles(cur), Seq.empty, System.currentTimeMillis()))))
+        val files = m.activeFiles(cur)
+        // the live files' merged schema; files whose schemas conflict keep
+        // none, so reads take it from their footers and fail as before
+        val schema =
+          try if (files.isEmpty) None else Some(schemaOf(m, files))
+          catch { case _: org.apache.spark.SparkException => None }
+        commitMeta(m, m.copy(versions =
+          Seq(entry(cur, "unversioned", files, Seq.empty, schema))))
       }
       0L
     }
@@ -455,8 +505,7 @@ final class GraftTable private (
     if (files.isEmpty)
       return GraftTable.UpdateStatus(noopVersion(m, v, "delete"), 0L, 0L)
     val k = keys.toDF("_k").distinct()
-    val df = toLogical(
-      spark.read.option("mergeSchema", "true").parquet(files: _*), m)
+    val df = toLogical(readFiles(m, files), m)
       .withColumn(FileCol, input_file_name())
     val joined = df.join(k, df(keyCol) === k("_k"), "left_outer")
     val hit = col(VMax) === Live && k("_k").isNotNull
@@ -629,7 +678,11 @@ final class GraftTable private (
         keyType.get(k).fold(d)(t => d.withColumn(k, col(k).cast(t)))
       }
       val updSchema = aligned.schema
-      val updRows: Seq[org.apache.spark.sql.Row] = aligned.collect().toSeq
+      val updRows: Seq[org.apache.spark.sql.Row] =
+        aligned.limit(MaxBatchUpdateRows + 1).collect().toSeq
+      require(updRows.size <= MaxBatchUpdateRows,
+        s"batchUpdate takes at most $MaxBatchUpdateRows rows (they are held on " +
+          "the driver); apply larger changes with update(...)")
       val updates = { // LocalRelation: probes/joins below re-execute nothing
         val list = new java.util.ArrayList[org.apache.spark.sql.Row](updRows.size)
         updRows.foreach(list.add)
@@ -743,8 +796,7 @@ final class GraftTable private (
     // predicates, with their exact key tuple and containing file
     val probe: Array[org.apache.spark.sql.Row] =
       if (files.isEmpty || distinctTuples.isEmpty) Array.empty
-      else toLogical(
-          spark.read.option("mergeSchema", "true").parquet(files: _*), m)
+      else toLogical(readFiles(m, files), m)
         .filter(col(VMax) === Live && keyListPredicate(keyCols, updKeyTuples))
         .select((input_file_name().as(FileCol) +: keyCols.map(col)): _*)
         .collect()
@@ -768,8 +820,8 @@ final class GraftTable private (
     // active file again and filtered on input_file_name, which prunes
     // nothing at the scan)
     val renamed = updates.columns.foldLeft(updates)((d, c) => d.withColumnRenamed(c, s"_u_$c"))
-    val image = toLogical(
-      spark.read.option("mergeSchema", "true").parquet(hitFiles: _*), m)
+    val touchedFiles = manifestFilesMatching(m, hitFiles)
+    val image = toLogical(readFiles(m, touchedFiles), m)
     val joinCond = keyCols.map(k => image(k) === renamed(s"_u_$k")).reduce(_ && _)
     // updates frames are small key-lists: broadcast them
     val touched = image.join(broadcast(renamed), joinCond, "left_outer")
@@ -791,7 +843,7 @@ final class GraftTable private (
       leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
         sum(when(col(VMin) === v && isErr, 1L)).as(s"_exc_$i") }
     val out = closed.union(updated).observe(obs, metrics.head, metrics.tail: _*)
-    val ver = rewrite(m, v, "batch_update", out, manifestFilesMatching(m, hitFiles))
+    val ver = rewrite(m, v, "batch_update", out, touchedFiles)
     val n = Option(obs.get("_n")).collect { case x: java.lang.Long => x.longValue() }
       .getOrElse(0L)
     val excCounts = leaves.zipWithIndex.map { case ((nm, _, _), i) =>
@@ -919,9 +971,11 @@ final class GraftTable private (
       case None    => image.withColumn(c.name, lit(null).cast(c.dataType))
     }
     val dir = dataDir(v, "add_column")
-    toPhysical(out, newMeta).write.mode("overwrite").parquet(dir)
+    val written = toPhysical(out, newMeta)
+    written.write.mode("overwrite").parquet(dir)
     commitMetaOrClean(m, newMeta.copy(versions = m.versions :+
-      entry(v, "add_column", listParquetFiles(dir), m.activeFiles(m.currentVersion)),
+      entry(v, "add_column", listParquetFiles(dir), m.activeFiles(m.currentVersion),
+        Some(written.schema)),
       nextRowId = m.nextRowId), dir)
     v
   }
@@ -1135,7 +1189,7 @@ final class GraftTable private (
     }
     require(!zOrder || phys.size >= 2,
       "zOrder clustering needs at least 2 clusterBy columns (use the linear form for 1)")
-    val raw0 = spark.read.option("mergeSchema", "true").parquet(files: _*)
+    val raw0 = readFiles(m, files)
     if (zOrder) phys.foreach { c =>
       // numeric domains bucket via the native quantile kernel; strings via
       // order-preserving sampled cuts (ZOrder.cluster) — both leave the
@@ -1169,7 +1223,7 @@ final class GraftTable private (
     }
     writer.parquet(dir)
     commitMetaOrClean(m, m.copy(versions = m.versions :+
-      entry(v, "compact", listParquetFiles(dir), files)), dir)
+      entry(v, "compact", listParquetFiles(dir), files, Some(raw.schema))), dir)
     v
   }
 
@@ -1422,7 +1476,7 @@ final class GraftTable private (
     val total =
       if (isPq) pqCodes.get.count()
       else {
-        val r = spark.read.parquet(ix.path).agg(sum(col("n"))).head
+        val r = graft.operators.Hnsw.readIndex(spark, ix.path).agg(sum(col("n"))).head
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     val score = VectorFunctions.cosineSimilarity(col("_vec"),
@@ -1494,8 +1548,7 @@ final class GraftTable private (
             .filter(e => e.version > ix.indexedThrough && e.version <= cur)
             .flatMap(_.added).distinct
           if (newFiles.nonEmpty) {
-            val newRows = toLogical(spark.read.option("mergeSchema", "true")
-              .parquet(newFiles: _*), m)
+            val newRows = toLogical(readFiles(m, newFiles), m)
               .filter(col(VMin) > ix.indexedThrough &&
                 col(ix.column).isNotNull)
             if (ix.kind == "ivfpq") {
@@ -1510,10 +1563,10 @@ final class GraftTable private (
                 .write.mode("overwrite").parquet(s"${ix.path}/sigs/seg-v$cur")
             else
               graft.operators.Hnsw.appendToIndex(newRows, ix.column, ix.idCol,
-                ix.path, shards = 1, ix.m, ix.efConstruction)
+                ix.path, ix.m, ix.efConstruction)
           }
           // segment count: code/sig-segment dirs (pq, minhash) / index-table
-          // rows (hnsw)
+          // rows (hnsw), the latter from the index files' footers
           def segDirCount(sub: String): Long = {
             val d = new java.io.File(s"${ix.path}/$sub")
             Option(d.listFiles()).map(_.count(f =>
@@ -1522,7 +1575,7 @@ final class GraftTable private (
           val segments =
             if (ix.kind == "ivfpq") segDirCount("codes")
             else if (ix.kind == "minhash") segDirCount("sigs")
-            else spark.read.parquet(ix.path).count()
+            else rowCountFromFooters(listParquetFiles(ix.path))
           val path =
             if (segments <= ix.segmentThreshold) ix.path
             else {
@@ -1574,8 +1627,7 @@ final class GraftTable private (
       : Option[(DataFrame, Seq[String])] = {
     val files = m.activeFiles(m.currentVersion)
     if (files.isEmpty) return None
-    val df = toLogical(
-      spark.read.option("mergeSchema", "true").parquet(files: _*), m)
+    val df = toLogical(readFiles(m, files), m)
       .withColumn(FileCol, input_file_name())
     val hitFiles = df.filter(col(VMax) === Live && pred)
       .select(FileCol).distinct().collect().map(_.getString(0))
@@ -1592,14 +1644,13 @@ final class GraftTable private (
     m.activeFiles(m.currentVersion).filter(f => hit.contains(norm(f)))
   }
 
-  /** full stored image (live + dead rows), logical column names.
-    * mergeSchema handles files written before/after a drop_column.
+  /** full stored image (live + dead rows), logical column names. The
+    * merged logged schema covers files written before/after a drop_column.
     */
   private def storedImage(m: TableMeta): DataFrame = {
     val files = m.activeFiles(m.currentVersion)
     if (files.isEmpty) toLogical(emptyFrame(m), m)
-    else toLogical(
-      spark.read.option("mergeSchema", "true").parquet(files: _*), m)
+    else toLogical(readFiles(m, files), m)
   }
 
   /** recompute every stored computed column transitively downstream of the
@@ -1684,9 +1735,10 @@ final class GraftTable private (
   private def rewrite(m: TableMeta, v: Long, op: String, out: DataFrame,
       removedFiles: Seq[String]): Long = {
     val dir = dataDir(v, op)
-    toPhysical(out, m).write.mode("overwrite").parquet(dir)
+    val written = toPhysical(out, m)
+    written.write.mode("overwrite").parquet(dir)
     commitMetaOrClean(m, m.copy(versions = m.versions :+
-      entry(v, op, listParquetFiles(dir), removedFiles)), dir)
+      entry(v, op, listParquetFiles(dir), removedFiles, Some(written.schema))), dir)
     v
   }
 
@@ -1695,25 +1747,24 @@ final class GraftTable private (
     v
   }
 
-  /** Max of a bigint column across `files`, from footer row-group
-    * statistics only. None if the files are empty of rows; falls back to a
-    * Spark footer-pushdown aggregate if any footer lacks stats for the
-    * column (never happens for columns Spark itself wrote, but manifests
-    * can reference foreign files after an import).
+  /** `f` over each file's parquet footer, read on the driver — no Spark
+    * job. All files open under one Hadoop conf and one set of read options:
+    * building them per file re-parses the Hadoop configuration every time.
     */
-  /** total row count across `files` from parquet footers — driver-side
-    * metadata only, no Spark job (same basis as maxLongFromFooters)
-    */
-  private def rowCountFromFooters(files: Seq[String]): Long = {
+  private def footers[A](files: Seq[String])(f: (String, ParquetMetadata) => A): Seq[A] = {
     val conf = spark.sessionState.newHadoopConf()
-    files.map { f =>
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    files.map { file =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }.sum
+        .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
+      try f(file, r.getFooter) finally r.close()
+    }
   }
+
+  /** total row count across `files` from parquet footers */
+  private def rowCountFromFooters(files: Seq[String]): Long =
+    footers(files)((_, f) => f.getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Error-carrying cell surfaces of the table, for the reference's
     * `UpdateStatus.num_excs` and `cols_with_excs` counts
@@ -1747,64 +1798,54 @@ final class GraftTable private (
     * statistics — driver-side metadata, no Spark job. Falls back to one
     * counting job if a footer lacks null counts (foreign imported files).
     */
-  private def nonNullCountFromFooters(files: Seq[String], leafDotPath: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
+  private def nonNullCountFromFooters(files: Seq[String], leafDotPath: String): Long =
     try {
-      files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          r.getFooter.getBlocks.asScala.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == leafDotPath) match {
-              case None => 0L // column absent in this file: no cells
-              case Some(leaf) =>
-                val st = leaf.getStatistics
-                require(st != null && !st.isEmpty,
-                  s"no null stats for $leafDotPath in $f")
-                b.getRowCount - st.getNumNulls
-            }
-          }.sum
-        } finally r.close()
+      footers(files) { (file, f) =>
+        f.getBlocks.asScala.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == leafDotPath) match {
+            case None => 0L // column absent in this file: no cells
+            case Some(leaf) =>
+              val st = leaf.getStatistics
+              require(st != null && !st.isEmpty,
+                s"no null stats for $leafDotPath in $file")
+              b.getRowCount - st.getNumNulls
+          }
+        }.sum
       }.sum
     } catch {
       case _: Exception => // dotted path = struct field access on the raw read
-        spark.read.option("mergeSchema", "true").parquet(files: _*)
-          .filter(col(leafDotPath).isNotNull).count()
+        readFiles(meta, files).filter(col(leafDotPath).isNotNull).count()
     }
-  }
 
-  private def maxLongFromFooters(files: Seq[String], colName: String): Option[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
+  /** Max of a bigint column across `files`, from footer row-group
+    * statistics only. None if the files are empty of rows; falls back to a
+    * Spark aggregate if any footer lacks stats for the column (never
+    * happens for columns Spark itself wrote, but manifests can reference
+    * foreign files after an import).
+    */
+  private def maxLongFromFooters(files: Seq[String], colName: String): Option[Long] =
     try {
-      val maxes = files.flatMap { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          r.getFooter.getBlocks.asScala.flatMap { b =>
-            b.getColumns.asScala
-              .filter(_.getPath.toDotString == colName)
-              .map { c =>
-                val st = c.getStatistics
-                require(st != null && st.hasNonNullValue || b.getRowCount == 0,
-                  s"no stats for $colName in $f")
-                st
-              }
-              .collect { case st if st.hasNonNullValue =>
-                st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-              }
-          }
-        } finally r.close()
-      }
+      val maxes = footers(files) { (file, f) =>
+        f.getBlocks.asScala.flatMap { b =>
+          b.getColumns.asScala
+            .filter(_.getPath.toDotString == colName)
+            .map { c =>
+              val st = c.getStatistics
+              require(st != null && st.hasNonNullValue || b.getRowCount == 0,
+                s"no stats for $colName in $file")
+              st
+            }
+            .collect { case st if st.hasNonNullValue =>
+              st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+            }
+        }
+      }.flatten
       if (maxes.isEmpty) None else Some(maxes.max)
     } catch {
       case _: Exception => // foreign footer without stats: one Spark job
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
         val row = spark.read.parquet(files: _*).agg(max(col(colName))).head
         if (row.isNullAt(0)) None else Some(row.getLong(0))
     }
-  }
 
   private implicit class JavaListOps[A](l: java.util.List[A]) {
     def asScala: Seq[A] = {
@@ -1823,8 +1864,9 @@ final class GraftTable private (
       .map(_.getPath.toString).sorted.toSeq
   }
 
-  private def entry(v: Long, op: String, added: Seq[String], removed: Seq[String]) =
-    VersionEntry(v, op, added, removed, System.currentTimeMillis())
+  private def entry(v: Long, op: String, added: Seq[String], removed: Seq[String],
+      schema: Option[StructType] = None) =
+    VersionEntry(v, op, added, removed, System.currentTimeMillis(), schema.map(_.json))
 }
 
 object GraftTable {
@@ -1892,6 +1934,8 @@ object GraftTable {
   val VMax = "_v_max"
   val Live: Long = Long.MaxValue
   private val FileCol = "_file"
+  /** Ceiling on a `batchUpdate` frame: its rows are collected to the driver. */
+  val MaxBatchUpdateRows = 100000
   // wall-clock replay budget for CAS conflicts from out-of-band writers
   // (attempts cost seconds of Spark jobs — budget time, not attempts)
   private val RetryBudgetMs = 120000L

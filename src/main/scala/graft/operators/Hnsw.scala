@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sharded HNSW approximate-nearest-neighbor index (reference: EmbeddingIndex
   * with an ANN backend, `pixeltable/catalog/...embedding index`; algorithm:
@@ -316,13 +317,22 @@ object Hnsw {
     else cq * cr + math.sqrt((1 - cq * cq) * (1 - cr * cr))
   }
 
+  /** Layout of the index table `shardRows` writes, one row per shard.
+    * Reads declare it instead of inferring it from the files' footers.
+    */
+  val IndexSchema: StructType = StructType.fromDDL(
+    "shard bigint, n bigint, centroid array<double>, min_cos double, graph binary")
+
+  def readIndex(spark: SparkSession, indexPath: String): DataFrame =
+    spark.read.schema(IndexSchema).parquet(indexPath)
+
+  /** One graph per partition of `shardsOf`'s output. */
   private def shardRows(df: DataFrame, vecCol: String, idCol: String,
-      shards: Int, m: Int, efConstruction: Int) = {
+      m: Int, efConstruction: Int)(shardsOf: DataFrame => DataFrame) = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+    shardsOf(df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")))
       .as[(Long, Array[Double])]
-      .repartition(shards, col(idCol)) // deterministic row→shard mapping
       .mapPartitions { it =>
         val g = buildGraph(it, m, efConstruction)
         if (g.size == 0) Iterator.empty
@@ -342,17 +352,19 @@ object Hnsw {
     */
   def buildIndex(df: DataFrame, vecCol: String, idCol: String, path: String,
       shards: Int, m: Int = 16, efConstruction: Int = 100): Unit =
-    shardRows(df, vecCol, idCol, shards, m, efConstruction)
+    shardRows(df, vecCol, idCol, m, efConstruction)(
+      _.repartition(shards, col(idCol))) // deterministic row→shard mapping
       .write.mode("overwrite").parquet(path)
 
-  /** Incremental maintenance: new rows become NEW shards appended to the
+  /** Incremental maintenance: new rows become ONE new shard appended to the
     * index table (the Lucene segment model — inserts never rewrite existing
     * graphs; periodic `buildIndex` over the full table is the compaction).
+    * The shard's graph is built over the rows in input order, in the job
+    * that writes it (no shuffle).
     */
   def appendToIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, shards: Int = 1, m: Int = 16,
-      efConstruction: Int = 100): Unit =
-    shardRows(df, vecCol, idCol, shards, m, efConstruction)
+      path: String, m: Int = 16, efConstruction: Int = 100): Unit =
+    shardRows(df, vecCol, idCol, m, efConstruction)(_.coalesce(1))
       .write.mode("append").parquet(path)
 
   /** Search: shard summaries are scored DISTRIBUTED — cos(query, centroid)
@@ -369,7 +381,7 @@ object Hnsw {
     import graft.functions.VectorFunctions
     val q = query.toArray
     val qu = unit(q)
-    val index = spark.read.parquet(indexPath)
+    val index = readIndex(spark, indexPath)
     val effEf = math.max(ef, k)
 
     val pruned =
@@ -431,7 +443,7 @@ object Hnsw {
     import graft.functions.VectorFunctions
     val q = query.toArray
     val effEf = math.max(ef, k)
-    val cands = spark.read.parquet(indexPath)
+    val cands = readIndex(spark, indexPath)
       .select(col("graph")).as[Array[Byte]]
       .flatMap { b =>
         val g = deserialize(b)

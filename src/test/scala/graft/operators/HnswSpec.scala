@@ -93,7 +93,7 @@ class HnswSpec extends AnyFunSuite {
       "embedding", "vec_id", idx, shards = 2)
     val more = (300L until 500L).map(i => i -> vec(i))
     Hnsw.appendToIndex(more.toDF("vec_id", "embedding"),
-      "embedding", "vec_id", idx, shards = 1)
+      "embedding", "vec_id", idx)
     assert(spark.read.parquet(idx).count() == 3) // 2 built + 1 appended
     val q = vec(424242L)
     val got = Hnsw.search(spark, idx, q.toSeq, 10, ef = 96)

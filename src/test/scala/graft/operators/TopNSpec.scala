@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.TestSpark
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.expressions.Window
@@ -64,6 +63,9 @@ class TopNSpec extends AnyFunSuite {
     val df = corpus().cache()
     df.count()
     try {
+      // SQL executions, not jobs: AQE may split one query into a map-stage
+      // job and a result job
+      def probeQueries(body: => DataFrame): Int = TestSpark.jobsDuring(body).distinct.size
       assert(probeQueries(TopN.perGroup(df, Seq(col("g")), Seq(col("k")), 5, cutoffs)) == 1)
       assert(probeQueries(TopN.perGroup(df, Seq(col("g")), Seq(col("k")), 5)) == 0)
     } finally df.unpersist()
@@ -73,31 +75,5 @@ class TopNSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       TopN.perGroup(corpus(), Seq(col("g")), Seq(col("k").desc), 5, cutoffs))
     assert(e.getMessage.contains("plain ascending leading key"), e.getMessage)
-  }
-
-  /** SQL executions that ran jobs while `body` was built (AQE may split one
-    * query into a map-stage job and a result job, so jobs are grouped by
-    * their execution id).
-    */
-  private def probeQueries(body: => DataFrame): Int = {
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        ids.add(String.valueOf(js.properties.getProperty("spark.sql.execution.id")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // the listener bus is async (and private); poll until the set settles
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 15000) {
-        Thread.sleep(200); waited += 200
-        val cur = ids.size
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    ids.size
   }
 }
