@@ -10,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // warmup: a small real query through the full stack (scan+agg+codegen)
     try SparkEntry.queries.head._2(spark, sfDir).collect()
     catch { case _: Throwable => () }
@@ -72,8 +63,9 @@ object Bench {
     // this. One tiny throwaway stream pays those costs before anything
     // is timed. Temp-dir handling is inlined (not QueryUtil.tempDir) so
     // this file stays overlay-portable: tools/bench_ab.py copies the
-    // CURRENT Bench.scala into the prev-commit worktree, which may
-    // predate helpers elsewhere in the tree.
+    // CURRENT Bench.scala and Sessions.scala into the prev-commit
+    // worktree, which may predate helpers elsewhere in the tree, so this
+    // file depends only on SparkEntry and Sessions.
     try {
       val warmDir = java.nio.file.Files.createTempDirectory("bench_swu")
       Runtime.getRuntime.addShutdownHook(new Thread(() => {

@@ -1174,22 +1174,15 @@ object Pipeline {
         // (Streaming.windowedCounts, StreamingSpec).
         import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val raw = s.read.parquet(s"$dir/events.parquet")
         // the file source ingests DIRECTORIES (files arriving over time);
         // the corpus table is one file — stage it via symlink, zero copy
         val stage = graft.QueryUtil.tempDir("q101_in")
         java.nio.file.Files.createSymbolicLink(
           stage.resolve("events.parquet"),
           java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath)
-        // ts physical type varies by generator version (TESTDATA.md):
-        // LongType means nanosAsLong fired on a TIMESTAMP(NANOS) file.
-        val tsNorm = schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz")
-          case _ => col("ts").cast("timestamp_ntz")
-        }
-        val stream = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("ts", tsNorm)
+        val stream = s.readStream.schema(raw.schema).parquet(stage.toString)
+          .withColumn("ts", T.normalizeTs(raw))
         val agg = stream
           .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hr"),
             col("event_type"))

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.catalog._
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end walkthrough of the versioned-table API: create → insert with
@@ -14,14 +13,7 @@ object CatalogDemo {
   def main(args: Array[String]): Unit = {
     val wh = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     import spark.implicits._
 
     val cat = new Catalog(wh)

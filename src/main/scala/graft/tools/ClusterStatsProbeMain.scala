@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-executor verification harness for `FileCache.clusterStats`: runs
   * a `local-cluster[2,2,…]` session (two REAL executor JVMs), populates a
   * cache on every executor through a barrier stage, then asserts the
@@ -15,27 +13,8 @@ import org.apache.spark.sql.SparkSession
 object ClusterStatsProbeMain {
   def main(args: Array[String]): Unit = {
     val cacheDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-clusterstats-probe")
-      .config("spark.executor.memory", "1g")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // executors are forked JVMs: give them this JVM's classpath and the
-      // JDK17 add-opens flags sbt injects for the parent. Absolutized:
-      // executors start in their own work dir, where a relative entry
-      // resolves to nothing and every shipped lambda dies with a
-      // misleading SerializedLambda ClassCastException (see
-      // ClusterSweepMain).
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path").split(java.io.File.pathSeparator)
-          .map(p => new java.io.File(p).getAbsolutePath)
-          .mkString(java.io.File.pathSeparator))
-      .config("spark.executor.extraJavaOptions",
-        sys.props.get("graft.probe.addOpens").getOrElse(""))
-      .getOrCreate()
+    val spark = graft.Sessions.cluster(2, 2, 1024)
     try {
-      spark.sparkContext.setLogLevel("WARN")
       val slots = spark.sparkContext.defaultParallelism // 2 executors × 2 cores
       // populate: one tiny cache entry per EXECUTOR (unique url per JVM)
       spark.sparkContext.parallelize(0 until slots, slots).barrier()

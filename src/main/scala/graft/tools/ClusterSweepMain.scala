@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry sweep under REAL multi-executor deployment
   * (`local-cluster[4,8,8192]` — four separate executor JVMs): flushes
   * any JVM-singleton / broadcast / serialization assumption the
@@ -25,34 +23,7 @@ object ClusterSweepMain {
     val sfDir = args(0)
     val outJson = args(1)
     val only = args.drop(2).toSet
-    val addOpens = sys.props.getOrElse("graft.probe.addOpens", "")
-    // NOTE: -Dspark.* keys are rejected inside extraJavaOptions
-    val execJavaOpts = (addOpens + " --add-modules=jdk.incubator.vector").trim
-    val spark = SparkSession.builder()
-      .master("local-cluster[4,8,8192]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // executors are forked JVMs: hand them this JVM's classpath + the
-      // JDK17 add-opens / vector-module flags. Entries MUST be
-      // absolutized: the standalone worker starts executors in their own
-      // work dir, so a relative `target/scala-2.13/classes` silently
-      // resolves to nothing there. The resulting failure is NOT a clear
-      // ClassNotFoundException but `ClassCastException: cannot assign
-      // instance of SerializedLambda to field ...` on every shipped
-      // lambda — ObjectInputStream swallows the lookup failure inside
-      // SerializedLambda.readResolve and the raw proxy object surfaces at
-      // field assignment (round-12 finding; cost half a day, hence this
-      // comment).
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path").split(java.io.File.pathSeparator)
-          .map(p => new java.io.File(p).getAbsolutePath)
-          .mkString(java.io.File.pathSeparator))
-      .config("spark.executor.extraJavaOptions", execJavaOpts)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.cluster(4, 8, 8192)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Double)]
     graft.SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

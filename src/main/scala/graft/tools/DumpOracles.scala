@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dump SparkEntry.oracleSql as JSON without starting Spark — feeds
   * tools/oracle_typecheck.py, the mechanical DuckDB DESCRIBE sweep that
   * fails on any HUGEINT-typed oracle output column (the r5/r6/r7 gate-red
@@ -13,18 +11,7 @@ import java.nio.file.{Files, Paths}
 object DumpOracles {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    graft.Verify.writeOracleSql(out)
     println(s"[dump-oracles] wrote ${graft.SparkEntry.oracleSql.size} oracle SQLs to $out")
   }
 }

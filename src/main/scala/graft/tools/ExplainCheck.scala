@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan hygiene check across the whole query registry: for each query print
   * whether the physical plan has parquet filter pushdown, broadcast joins,
@@ -12,13 +11,7 @@ object ExplainCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val prefix = args.drop(1).headOption.getOrElse("")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.startsWith(prefix)).foreach {
       case (name, fn) =>
         try {

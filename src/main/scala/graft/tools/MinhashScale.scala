@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.catalog.{Catalog, ColumnDef, GraftTable}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what the DML-maintained minhash index amortizes: checking an
@@ -21,13 +20,7 @@ object MinhashScale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val bigDir = s"/tmp/graft_scale_${mult}x"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     if (!new java.io.File(s"$bigDir/documents.parquet").exists()) {
       val src = spark.read.parquet(s"$base/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-robustness probe: replicate the sf0.1 corpus m× with key offsets
@@ -130,16 +129,7 @@ object ScaleCheck {
     // corpus can be probed at different core counts (r16 core-scaling
     // evidence: VERDICT item 6 — sf0.1 fixtures sit on the scheduling
     // floor, so c8/c32 ratios are only meaningful at 10x+)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(name: String, keyCols: Map[String, Long]): Unit = {

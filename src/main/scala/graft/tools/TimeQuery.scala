@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time individual registry queries: `runMain graft.tools.TimeQuery
   * <sfDir> <reps> <name...>`. Same session config + noop-sink protocol as
   * graft.Bench, but scoped to named queries — for bisecting one query's
@@ -12,19 +10,7 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // MUST match Bench's session: without the extensions the measured
-      // plans differ (UDF-triple-evaluation pruning rule, native exprs) and
-      // TimeQuery numbers read systematically hotter than the bench's
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
       val fn = qs(n)

@@ -4,18 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Pinned at 4 cores so results do not depend on the host's
+    * SPARK_GRAFT_CPUS. */
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** The Spark jobs started while `body` ran, one entry per job: the SQL
     * execution id the job ran under ("null" outside SQL). AQE may split one

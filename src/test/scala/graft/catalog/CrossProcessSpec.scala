@@ -1,7 +1,6 @@
 package graft.catalog
 
 import graft.TestSpark
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Helper main for CrossProcessSpec: each invocation is a SEPARATE JVM
@@ -13,11 +12,7 @@ object CrossProcessWriter {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, table, tag, nStr) = args.take(4)
     val n = nStr.toInt
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(2)
     import spark.implicits._
     val t = GraftTable.open(spark, new Catalog(warehouse), table)
     val vs = (0 until n).map { i =>

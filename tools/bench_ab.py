@@ -46,26 +46,31 @@ def main():
     # gates to a single cold sample; comparing that against the old
     # min-of-3-warm numbers mislabeled the methodology change as a 3-10x
     # code regression on every streaming gate). Bench.scala must stay
-    # self-contained — depending ONLY on SparkEntry, no other graft
-    # helpers — so it compiles against any round's tree (r15: a
+    # self-contained — depending ONLY on SparkEntry and Sessions (the
+    # session factory, overlaid with it so both sides plan under the
+    # same config) — so it compiles against any round's tree (r15: a
     # QueryUtil.tempDir call added in r14 would have broken compilation
     # of every pre-r14 prev side; it is now inlined).
-    bench_src = "src/main/scala/graft/Bench.scala"
-    with open(os.path.join(repo, bench_src), "rb") as f:
-        cur_bench = f.read()
-    with open(os.path.join(wt, bench_src), "wb") as f:
-        f.write(cur_bench)
+    for src in ("src/main/scala/graft/Bench.scala",
+                "src/main/scala/graft/Sessions.scala"):
+        with open(os.path.join(repo, src), "rb") as f:
+            cur = f.read()
+        with open(os.path.join(wt, src), "wb") as f:
+            f.write(cur)
 
     # compile both sides up front so measured runs are compile-free
     for cwd in (wt, repo):
         run(["sbt", "-batch", "compile"], cwd)
 
+    # the caller's core count, else this host's: a fixed count above the
+    # host's cores oversubscribes them and measures the scheduler
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     sides = {"prev": wt, "cur": repo}
     best = {"prev": {}, "cur": {}}
     order = [("prev", wt), ("cur", repo)] * passes
     for i, (tag, cwd) in enumerate(order):
         outfile = f"/tmp/bench_ab_{tag}_{i}.json"
-        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS="32",
+        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS=cpus,
                    SPARK_GRAFT_BENCH_OUT=outfile)
         run(["sbt", "-batch", "runMain graft.Bench"], cwd, env)
         data = json.load(open(outfile))
