@@ -116,18 +116,20 @@ object Bench {
     // complete per-query map to its own file so every round's numbers are
     // diffable regardless of tail size.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+    // a failed write goes to stderr: stdout's last line stays the compact one
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case e: Exception => System.err.println(s"[bench] could not write $outPath: $e") }
     // The full one-line JSON above is ~5.5 KB at 206 queries — larger than
     // the driver's 2,000-char stdout tail, so BENCH_r14/r15 both recorded
     // `parsed: null` and PERF came back empty (r15 VERDICT item 2). Print a
     // COMPACT totals-only line LAST so the metric always parses from any
-    // tail window; the complete per-query map stays in BENCH_FULL.json
-    // (written above) for the judge/driver to diff. This is a measurement-
+    // tail window; the complete per-query map stays in the detail file
+    // (`outPath`, written above) to diff. This is a measurement-
     // REPORTING fix only: the timed methodology (noop sink, interleaved
     // min-of-2, name order) is unchanged and the full line still prints.
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","errors":$errs,"n":${results.length},"detail":"BENCH_FULL.json","sf":"$sfDir"}""")
+    val detail = outPath.replace("\\", "\\\\").replace("\"", "\\\"") // JSON-escaped
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","errors":$errs,"n":${results.length},"detail":"$detail","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -16,11 +16,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Delta-style file-level add/remove log; the MVCC filter
   * `_v_min <= V AND _v_max > V` pushes down to the parquet scan.
   *
-  * Scale behavior: inserts append (new files only). Delete/update/
-  * batchUpdate are file-pruned copy-on-write — `input_file_name()`
-  * identifies the files that actually contain matching live rows and only
-  * those are rewritten; untouched files stay in the manifest. Write cost is
-  * proportional to touched files, not table size.
+  * Scale behavior: inserts append (new files only). Every row-changing op
+  * (delete, deleteByKeys, update, batchUpdate, recomputeColumns) is one
+  * file-pruned copy-on-write `rewrite`: a probe (`input_file_name()`)
+  * finds the files that actually contain hit live rows, and only those are
+  * read and rewritten; untouched files stay in the manifest. The probe
+  * scans the table (batchUpdate's key-list probe prunes row groups); the
+  * rewrite's read and write are proportional to touched files.
   *
   * Concurrency: optimistic. Every mutation writes its data files to a
   * UNIQUE directory (no two writers ever collide physically), then
@@ -62,9 +64,13 @@ final class GraftTable private (
   /** Stored rows of `files` (manifest paths, physical column names) under
     * the merge of the schemas their version entries logged — the schema a
     * `mergeSchema` read would infer, known without a footer-reading job.
+    * `schemaFiles` widens that schema to other files' columns (a rewrite
+    * reads its touched files with every active file's columns).
     */
-  private def readFiles(m: TableMeta, files: Seq[String]): DataFrame =
-    spark.read.schema(schemaOf(m, files)).parquet(files: _*)
+  private def readFiles(m: TableMeta, files: Seq[String],
+      schemaFiles: Seq[String] = Nil): DataFrame =
+    spark.read.schema(schemaOf(m, if (schemaFiles.isEmpty) files else schemaFiles))
+      .parquet(files: _*)
 
   /** Merge, in log order, of the schemas of the entries that added `files`
     * (file order, as a `mergeSchema` read folds; merging a schema again
@@ -378,12 +384,6 @@ final class GraftTable private (
         nextRowId = maxId + 1), dir)
       v
     }
-    // outside the retry body: a maintenance-side conflict must never replay
-    // an already-committed insert (which would duplicate its rows)
-    maintainIndexes()
-    squashIfUnversioned()
-    // the files just written are live (squash/vacuum never touch them),
-    // so footer counts remain readable after the unversioned squash
     val n = rowCountFromFooters(insertedFiles)
     // error-cell counts from the same footers (null stats), also job-free
     val excs = errLeaves
@@ -401,25 +401,33 @@ final class GraftTable private (
         val cols = back.columns
         Some(back.collect().toSeq.map(_.getValuesMap[Any](cols)))
       }
-    attachCacheWarnings(GraftTable.UpdateStatus(v, numRows = n,
+    afterCommit(GraftTable.UpdateStatus(v, numRows = n,
       numComputedValues = n * computedCols.length,
       numExcs = excs.map(_._2).sum,
       updatedCols = computedCols,
       colsWithExcs = excs.map(_._1),
-      rows = returned))
+      rows = returned), opened = true)
   }
 
-  /** The reference's `emit_eviction_warnings` (utils/filecache.py:334-338),
-    * fired once per top-level DML op: drain the JVM-local media caches'
-    * working-set re-download warnings onto the returned status. The drain
-    * consumes the "new since last warning" flag, so an op without fresh
-    * re-downloads reports none. (Executor-side caches on a real cluster
-    * surface through `FileCache.clusterStats` instead — a driver can't
-    * synchronously poll remote JVMs at commit time.)
+  /** The tail every DML op runs once after its commit, outside the retry
+    * body (a maintenance-side conflict must never replay a committed op):
+    * index upkeep when the op opened rows (new or rewritten rows may carry
+    * new values for an indexed column, and the catch-up appends them so
+    * searchIndex ranks by the new vector), the unversioned squash, then the
+    * reference's `emit_eviction_warnings` (utils/filecache.py:334-338):
+    * drain the JVM-local media caches' working-set re-download warnings
+    * onto the returned status. The drain consumes the "new since last
+    * warning" flag, so an op without fresh re-downloads reports none.
+    * (Executor-side caches on a real cluster surface through
+    * `FileCache.clusterStats` instead — a driver can't synchronously poll
+    * remote JVMs at commit time.)
     */
-  private def attachCacheWarnings(
-      st: GraftTable.UpdateStatus): GraftTable.UpdateStatus =
+  private def afterCommit(st: GraftTable.UpdateStatus,
+      opened: Boolean): GraftTable.UpdateStatus = {
+    if (opened) maintainIndexes()
+    squashIfUnversioned()
     st.copy(cacheWarnings = graft.multimodal.FileCache.drainEvictionWarnings())
+  }
 
   /** Unversioned tables retain no history: after every mutation the
     * version log squashes to one entry holding the live file set (the
@@ -456,27 +464,14 @@ final class GraftTable private (
     * rides the rewrite as a Spark `Observation` metric (CollectMetrics on
     * the write plan) — no extra job, exact.
     */
-  def deleteStatus(predicateSql: String): GraftTable.UpdateStatus = {
-    var n = 0L
-    val ver = retryOnConflict {
+  def deleteStatus(predicateSql: String): GraftTable.UpdateStatus =
+    deleteMarked(img => (img, expr(predicateSql)))
+
+  private def deleteMarked(mark: Mark): GraftTable.UpdateStatus =
+    afterCommit(retryOnConflict {
       val m = meta
-      val v = m.currentVersion + 1
-      withTouchedFiles(m, expr(predicateSql)) match {
-        case None => n = 0L; noopVersion(m, v, "delete")
-        case Some((touchedDf, touchedFiles)) =>
-          val obs = org.apache.spark.sql.Observation()
-          val out = touchedDf.withColumn(VMax,
-            when(col(VMax) === Live && expr(predicateSql), lit(v)).otherwise(col(VMax)))
-            .observe(obs, sum(when(col(VMax) === v, 1L)).as("_n"))
-          val res = rewrite(m, v, "delete", out, touchedFiles)
-          n = Option(obs.get("_n")).collect { case x: java.lang.Long => x.longValue() }
-            .getOrElse(0L)
-          res
-      }
-    }
-    squashIfUnversioned()
-    GraftTable.UpdateStatus(ver, numRows = n, numComputedValues = 0L)
-  }
+      rewrite(m, "delete", touchedFiles(m, mark), mark)
+    }, opened = false)
 
   /** Delete live rows whose `keyCol` value appears in `keys` (a one-column
     * DataFrame), fully distributed — the key set is never materialized on
@@ -484,45 +479,17 @@ final class GraftTable private (
     * exactly ONE table version is minted regardless of key count. File-pruned
     * copy-on-write like `delete`; only the driver-side file list (not rows)
     * is collected. The join strategy is left to Catalyst/AQE: small key sets
-    * broadcast, large ones shuffle.
+    * broadcast, large ones shuffle. Null keys match nothing.
     */
   def deleteByKeys(keys: DataFrame, keyCol: String): Long =
     deleteByKeysStatus(keys, keyCol).version
 
   /** deleteByKeys + UpdateStatus counts (Observation on the rewrite). */
   def deleteByKeysStatus(keys: DataFrame, keyCol: String): GraftTable.UpdateStatus = {
-    val st = deleteByKeysInner(keys, keyCol)
-    squashIfUnversioned()
-    attachCacheWarnings(st)
-  }
-
-  private def deleteByKeysInner(keys: DataFrame,
-      keyCol: String): GraftTable.UpdateStatus = retryOnConflict {
-    val m = meta
-    val v = m.currentVersion + 1
     require(keys.columns.length == 1, "deleteByKeys expects a single-column key frame")
-    val files = m.activeFiles(m.currentVersion)
-    if (files.isEmpty)
-      return GraftTable.UpdateStatus(noopVersion(m, v, "delete"), 0L, 0L)
     val k = keys.toDF("_k").distinct()
-    val df = toLogical(readFiles(m, files), m)
-      .withColumn(FileCol, input_file_name())
-    val joined = df.join(k, df(keyCol) === k("_k"), "left_outer")
-    val hit = col(VMax) === Live && k("_k").isNotNull
-    val hitFiles = joined.filter(hit).select(FileCol).distinct()
-      .collect().map(_.getString(0))
-    if (hitFiles.isEmpty)
-      return GraftTable.UpdateStatus(noopVersion(m, v, "delete"), 0L, 0L)
-    val obs = org.apache.spark.sql.Observation()
-    val out = joined.filter(col(FileCol).isin(hitFiles.toSeq: _*))
-      .withColumn(VMax, when(hit, lit(v)).otherwise(col(VMax)))
-      .drop(FileCol).drop("_k")
-      .observe(obs, sum(when(col(VMax) === v, 1L)).as("_n"))
-    val ver = rewrite(m, v, "delete", out, manifestFilesMatching(m, hitFiles))
-    val n = Option(obs.get("_n")).collect { case x: java.lang.Long => x.longValue() }
-      .getOrElse(0L)
-    attachCacheWarnings(
-      GraftTable.UpdateStatus(ver, numRows = n, numComputedValues = 0L))
+    deleteMarked(img =>
+      (img.join(k, img(keyCol) === k("_k"), "left_outer"), k("_k").isNotNull))
   }
 
   /** Update columns on rows matching a predicate; dependent computed columns
@@ -542,12 +509,11 @@ final class GraftTable private (
     */
   def updateStatus(setExprs: Map[String, String], predicateSql: String,
       cascade: Boolean = true): GraftTable.UpdateStatus = {
-    var n = 0L
-    var cascaded: Seq[String] = Seq.empty
-    var excCounts: Seq[(String, Long)] = Seq.empty
-    val v = retryOnConflict {
+    val mark: Mark = img => (img, expr(predicateSql))
+    val reopen = Reopen(setExprs.keys.toSeq, cascade, rows =>
+      setExprs.foldLeft(rows) { case (d, (c, e)) => d.withColumn(c, expr(e)) })
+    afterCommit(retryOnConflict {
       val m = meta
-      val v = m.currentVersion + 1
       m.primaryKey.filter(setExprs.contains).foreach(k =>
         throw new IllegalArgumentException(
           s"cannot update primary key column '$k' — the unique constraint " +
@@ -557,46 +523,8 @@ final class GraftTable private (
           setExprs.contains(c.name))
         .foreach(c => throw new IllegalArgumentException(
           s"column ${c.name} is computed and cannot be updated"))
-      withTouchedFiles(m, expr(predicateSql)) match {
-        case None => n = 0L; noopVersion(m, v, "update")
-        case Some((touchedDf, touchedFiles)) =>
-          val hit = col(VMax) === Live && expr(predicateSql)
-          val closed = touchedDf.withColumn(VMax, when(hit, lit(v)).otherwise(col(VMax)))
-          var updated = touchedDf.filter(hit)
-          setExprs.foreach { case (c, e) => updated = updated.withColumn(c, expr(e)) }
-          cascaded = if (cascade) dependentComputed(m, setExprs.keySet) else Seq.empty
-          updated = (if (cascade) recomputeCascade(updated, setExprs.keySet, m)
-                     else updated)
-            .withColumn(VMin, lit(v))
-            .withColumn(VMax, lit(Live))
-            .select(closed.columns.map(col): _*)
-          val leaves = errorLeafDescriptors(m)
-          val obs = org.apache.spark.sql.Observation()
-          // error-cell counts ride the SAME CollectMetrics pass as the
-          // row count — still zero extra jobs for num_excs
-          val metrics = sum(when(col(VMin) === v, 1L)).as("_n") +:
-            leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
-              sum(when(col(VMin) === v && isErr, 1L)).as(s"_exc_$i") }
-          val out = closed.union(updated).observe(obs, metrics.head, metrics.tail: _*)
-          val res = rewrite(m, v, "update", out, touchedFiles)
-          n = Option(obs.get("_n")).collect { case x: java.lang.Long => x.longValue() }
-            .getOrElse(0L)
-          excCounts = leaves.zipWithIndex.map { case ((nm, _, _), i) =>
-            nm -> Option(obs.get(s"_exc_$i"))
-              .collect { case x: java.lang.Long => x.longValue() }.getOrElse(0L)
-          }.filter(_._2 > 0)
-          res
-      }
-    }
-    // rewritten rows may carry new values for an indexed embedding column;
-    // the catch-up appends them so searchIndex ranks by the NEW vector
-    maintainIndexes()
-    squashIfUnversioned()
-    attachCacheWarnings(GraftTable.UpdateStatus(v, numRows = n,
-      numComputedValues = n * cascaded.length,
-      numExcs = excCounts.map(_._2).sum,
-      updatedCols = setExprs.keys.toSeq.sorted ++ cascaded,
-      colsWithExcs = excCounts.map(_._1)))
+      rewrite(m, "update", touchedFiles(m, mark), mark, Some(reopen))
+    }, opened = true)
   }
 
   /** stored computed columns whose transitive dependencies intersect
@@ -693,9 +621,7 @@ final class GraftTable private (
         updRows.map(r => keyIdx.map(i => r.get(i)))
       val (st0, matchedKeys) =
         batchUpdateInner(updates, updKeyTuples, keyCols, cascade, ifNotExists)
-      maintainIndexes()
-      squashIfUnversioned()
-      val st = attachCacheWarnings(st0)
+      val st = afterCommit(st0, opened = true)
       // upsert leg: unmatched rows come straight from the driver-held rows
       // (decided against the live image inside the inner probe, all under
       // the writer lock) — no anti-join job, no stale-plan hazard on
@@ -771,9 +697,8 @@ final class GraftTable private (
 
   /** Runs the COW update. Returns the status plus the set of update key
     * tuples that matched a live row (the upsert leg's complement). The ONE
-    * probe scan inside answers both the `ifNotExists` decision and the COW
-    * file pruning — r15 ran a separate job for each (unmatched anti-join,
-    * image.isEmpty, hitFiles collect).
+    * key-list probe inside answers both the `ifNotExists` decision and which
+    * files the rewrite touches.
     */
   private def batchUpdateInner(updates: DataFrame, updKeyTuples: Seq[Seq[Any]],
       keyCols: Seq[String], cascade: Boolean, ifNotExists: String)
@@ -787,7 +712,6 @@ final class GraftTable private (
         updates.columns.contains(c.name) && !keyCols.contains(c.name))
       .foreach(c => throw new IllegalArgumentException(
         s"column ${c.name} is computed and cannot be updated"))
-    val v = m.currentVersion + 1
     val setCols = updates.columns.filterNot(keyCols.contains).toSeq
     require(setCols.nonEmpty, "batchUpdate needs at least one non-key column")
     val distinctTuples = updKeyTuples.map(joinKey).toSet
@@ -812,49 +736,15 @@ final class GraftTable private (
       if (nMissing > 0) throw new NoSuchElementException(
         s"batch_update(): $nMissing row(s) not found")
     }
-    val hitFiles = exact.map(_._1).distinct
-    if (hitFiles.isEmpty)
-      return (GraftTable.UpdateStatus(noopVersion(m, v, "batch_update"), 0L, 0L),
-        matchedKeys)
-    // the rewrite reads ONLY the touched files (the old path scanned every
-    // active file again and filtered on input_file_name, which prunes
-    // nothing at the scan)
     val renamed = updates.columns.foldLeft(updates)((d, c) => d.withColumnRenamed(c, s"_u_$c"))
-    val touchedFiles = manifestFilesMatching(m, hitFiles)
-    val image = toLogical(readFiles(m, touchedFiles), m)
-    val joinCond = keyCols.map(k => image(k) === renamed(s"_u_$k")).reduce(_ && _)
     // updates frames are small key-lists: broadcast them
-    val touched = image.join(broadcast(renamed), joinCond, "left_outer")
-    val hit = col(VMax) === Live && col(s"_u_${keyCols.head}").isNotNull
-    val dropU = (d: DataFrame) =>
-      renamed.columns.foldLeft(d)((x, u) => x.drop(u))
-    val closed = dropU(touched.withColumn(VMax, when(hit, lit(v)).otherwise(col(VMax))))
-    var updated = touched.filter(hit)
-    setCols.foreach(c => updated = updated.withColumn(c, col(s"_u_$c")))
-    val cascaded = if (cascade) dependentComputed(m, setCols.toSet) else Seq.empty
-    updated = (if (cascade) recomputeCascade(dropU(updated), setCols.toSet, m)
-               else dropU(updated))
-      .withColumn(VMin, lit(v))
-      .withColumn(VMax, lit(Live))
-      .select(closed.columns.map(col): _*)
-    val leaves = errorLeafDescriptors(m)
-    val obs = org.apache.spark.sql.Observation()
-    val metrics = sum(when(col(VMin) === v, 1L)).as("_n") +:
-      leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
-        sum(when(col(VMin) === v && isErr, 1L)).as(s"_exc_$i") }
-    val out = closed.union(updated).observe(obs, metrics.head, metrics.tail: _*)
-    val ver = rewrite(m, v, "batch_update", out, touchedFiles)
-    val n = Option(obs.get("_n")).collect { case x: java.lang.Long => x.longValue() }
-      .getOrElse(0L)
-    val excCounts = leaves.zipWithIndex.map { case ((nm, _, _), i) =>
-      nm -> Option(obs.get(s"_exc_$i"))
-        .collect { case x: java.lang.Long => x.longValue() }.getOrElse(0L)
-    }.filter(_._2 > 0)
-    (GraftTable.UpdateStatus(ver, numRows = n,
-      numComputedValues = n * cascaded.length,
-      numExcs = excCounts.map(_._2).sum,
-      updatedCols = setCols.sorted ++ cascaded,
-      colsWithExcs = excCounts.map(_._1)), matchedKeys)
+    val mark: Mark = img => (img.join(broadcast(renamed),
+      keyCols.map(k => img(k) === renamed(s"_u_$k")).reduce(_ && _), "left_outer"),
+      col(s"_u_${keyCols.head}").isNotNull)
+    val reopen = Reopen(setCols, cascade, rows =>
+      setCols.foldLeft(rows)((d, c) => d.withColumn(c, col(s"_u_$c"))))
+    (rewrite(m, "batch_update", manifestFilesMatching(m, exact.map(_._1).distinct),
+      mark, Some(reopen)), matchedKeys)
   }
 
   /** Re-evaluate one or more stored computed columns (reference
@@ -871,10 +761,9 @@ final class GraftTable private (
     * Produces a normal version: time travel sees the old values.
     */
   def recomputeColumns(columns: Seq[String], whereSql: Option[String] = None,
-      cascade: Boolean = true, errorsOnly: Boolean = false): Long = {
-    val v = retryOnConflict {
+      cascade: Boolean = true, errorsOnly: Boolean = false): Long =
+    afterCommit(retryOnConflict {
       val m = meta
-      val v = m.currentVersion + 1
       require(columns.nonEmpty, "no columns to recompute")
       require(!errorsOnly || columns.size == 1,
         "cannot use errorsOnly=true with multiple columns")
@@ -892,31 +781,14 @@ final class GraftTable private (
           "surface (no errortype struct field or _errormsg sidecar)")
         basePred && leaves.map(_._3).reduce(_ || _)
       }
-      withTouchedFiles(m, pred) match {
-        case None => noopVersion(m, v, "recompute")
-        case Some((touchedDf, touchedFiles)) =>
-          val hit = col(VMax) === Live && pred
-          val closed = touchedDf.withColumn(VMax,
-            when(hit, lit(v)).otherwise(col(VMax)))
-          var updated = touchedDf.filter(hit)
-          // the named columns re-evaluate in dependency order (one named
-          // column may feed another); the cascade then picks up dependents
-          m.computedInTopoOrder.filter(c => columns.contains(c.name))
-            .foreach(c => updated = updated.withColumn(c.name,
-              expr(c.computedExpr.get).cast(c.dataType)))
-          if (cascade) updated = recomputeCascade(updated, columns.toSet, m)
-          updated = updated
-            .withColumn(VMin, lit(v))
-            .withColumn(VMax, lit(Live))
-            .select(closed.columns.map(col): _*)
-          rewrite(m, v, "recompute", closed.union(updated), touchedFiles)
-      }
-    }
-    // recomputed rows may carry new values for an indexed embedding column
-    maintainIndexes()
-    squashIfUnversioned()
-    v
-  }
+      val mark: Mark = img => (img, pred)
+      // the named columns re-evaluate in dependency order (one named
+      // column may feed another); the cascade then picks up dependents
+      val named = m.computedInTopoOrder.filter(c => columns.contains(c.name))
+      val reopen = Reopen(columns, cascade, rows => named.foldLeft(rows)((d, c) =>
+        d.withColumn(c.name, expr(c.computedExpr.get).cast(c.dataType))))
+      rewrite(m, "recompute", touchedFiles(m, mark), mark, Some(reopen))
+    }, opened = true).version
 
   /** Add a (possibly computed) column; existing rows are backfilled in one
     * batch rewrite (reference `add_computed_column` backfill,
@@ -1619,22 +1491,17 @@ final class GraftTable private (
 
   // ---------- internals ----------
 
-  /** Locate the active files containing live rows matching `pred`; returns
-    * the stored rows of ONLY those files plus the manifest paths, or None
-    * if nothing matches.
+  /** The file probe: the manifest files holding live rows `mark` hits —
+    * one scan of the active files, their distinct `input_file_name()`s
+    * collected (taken before `mark`, as a shuffled join loses it).
     */
-  private def withTouchedFiles(m: TableMeta, pred: org.apache.spark.sql.Column)
-      : Option[(DataFrame, Seq[String])] = {
+  private def touchedFiles(m: TableMeta, mark: Mark): Seq[String] = {
     val files = m.activeFiles(m.currentVersion)
-    if (files.isEmpty) return None
-    val df = toLogical(readFiles(m, files), m)
-      .withColumn(FileCol, input_file_name())
-    val hitFiles = df.filter(col(VMax) === Live && pred)
-      .select(FileCol).distinct().collect().map(_.getString(0))
-    if (hitFiles.isEmpty) None
-    else Some((
-      df.filter(col(FileCol).isin(hitFiles.toSeq: _*)).drop(FileCol),
-      manifestFilesMatching(m, hitFiles)))
+    if (files.isEmpty) return Nil
+    val (marked, hit) = mark(toLogical(readFiles(m, files), m)
+      .withColumn(FileCol, input_file_name()))
+    manifestFilesMatching(m, marked.filter(col(VMax) === Live && hit)
+      .select(FileCol).distinct().collect().map(_.getString(0)))
   }
 
   /** map input_file_name() URIs back to their manifest entries */
@@ -1732,14 +1599,53 @@ final class GraftTable private (
     out.get
   }
 
-  private def rewrite(m: TableMeta, v: Long, op: String, out: DataFrame,
-      removedFiles: Seq[String]): Long = {
+  /** The one copy-on-write rewrite behind every row-changing op. Reads ONLY
+    * the `touched` manifest files (with every active file's columns, as the
+    * probe saw them), closes the live rows `mark` hits (`_v_max := v`) and,
+    * with `reopen`, appends them again with its new values (`_v_min := v`,
+    * cascade applied), in one write. The closed-row count and the reopened
+    * rows' error-cell counts ride that write as one `Observation` (no extra
+    * job). Commits version v adding the written files and removing
+    * `touched`; no touched file commits an empty version.
+    */
+  private def rewrite(m: TableMeta, op: String, touched: Seq[String], mark: Mark,
+      reopen: Option[Reopen] = None): GraftTable.UpdateStatus = {
+    val v = m.currentVersion + 1
+    if (touched.isEmpty) return GraftTable.UpdateStatus(noopVersion(m, v, op), 0L, 0L)
+    val image = toLogical(readFiles(m, touched, m.activeFiles(m.currentVersion)), m)
+    val (marked, hit0) = mark(image)
+    val hit = col(VMax) === Live && hit0
+    val cols = image.columns.map(col)
+    val closed = marked.withColumn(VMax, when(hit, lit(v)).otherwise(col(VMax)))
+      .select(cols: _*)
+    val out = reopen.fold(closed) { r =>
+      val set = r.values(marked.filter(hit))
+      closed.union((if (r.cascade) recomputeCascade(set, r.cols.toSet, m) else set)
+        .withColumn(VMin, lit(v)).withColumn(VMax, lit(Live)).select(cols: _*))
+    }
+    val leaves = if (reopen.isEmpty) Nil else errorLeafDescriptors(m)
+    val obs = org.apache.spark.sql.Observation()
+    val metrics = sum(when(col(VMax) === v, 1L)).as("_n") +:
+      leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
+        sum(when(col(VMin) === v && isErr, 1L)).as(s"_exc_$i") }
     val dir = dataDir(v, op)
-    val written = toPhysical(out, m)
+    val written = toPhysical(out.observe(obs, metrics.head, metrics.tail: _*), m)
     written.write.mode("overwrite").parquet(dir)
     commitMetaOrClean(m, m.copy(versions = m.versions :+
-      entry(v, op, listParquetFiles(dir), removedFiles, Some(written.schema))), dir)
-    v
+      entry(v, op, listParquetFiles(dir), touched, Some(written.schema))), dir)
+    val got = obs.get
+    def observed(k: String) =
+      Option(got(k)).collect { case x: java.lang.Long => x.longValue() }.getOrElse(0L)
+    val n = observed("_n")
+    val excs = leaves.zipWithIndex.map { case ((nm, _, _), i) => nm -> observed(s"_exc_$i") }
+      .filter(_._2 > 0)
+    val cascaded = reopen.filter(_.cascade)
+      .map(r => dependentComputed(m, r.cols.toSet)).getOrElse(Nil)
+    GraftTable.UpdateStatus(v, numRows = n,
+      numComputedValues = n * cascaded.length,
+      numExcs = excs.map(_._2).sum,
+      updatedCols = reopen.map(_.cols.sorted).getOrElse(Nil) ++ cascaded,
+      colsWithExcs = excs.map(_._1))
   }
 
   private def noopVersion(m: TableMeta, v: Long, op: String): Long = {
@@ -1934,6 +1840,19 @@ object GraftTable {
   val VMax = "_v_max"
   val Live: Long = Long.MaxValue
   private val FileCol = "_file"
+
+  /** Flags the rows a row-changing op hits: from a stored image (logical
+    * names) to the frame the rewrite works on — the image itself, or the
+    * image joined with a key list — and the hit predicate over that frame.
+    */
+  private type Mark = DataFrame => (DataFrame, Column)
+
+  /** New values for the rows a rewrite reopens: `values` sets `cols`;
+    * with `cascade` their stored computed dependents recompute too.
+    */
+  private final case class Reopen(cols: Seq[String], cascade: Boolean,
+      values: DataFrame => DataFrame)
+
   /** Ceiling on a `batchUpdate` frame: its rows are collected to the driver. */
   val MaxBatchUpdateRows = 100000
   // wall-clock replay budget for CAS conflicts from out-of-band writers

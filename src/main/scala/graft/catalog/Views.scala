@@ -93,40 +93,19 @@ object Views {
       ColumnDef(valueCol, valueType)) ++ keepCols
     val view = GraftTable.create(spark, catalog, name, cols)
     setMark(view, lastSeenKey(base), 0L, base, base.meta.revertEpoch)
-    refreshComponentView(view, base, iteratorExprSql, valueCol, keepCols.map(_.name))
+    sync(view, base, components(iteratorExprSql, valueCol, keepCols.map(_.name)))
     view
   }
 
-  /** Incremental maintenance: expand only base rows inserted after the last
-    * refresh (`_v_min > lastSeen`) and append them to the view store.
+  /** Incremental maintenance of a component view — the same sync as
+    * `syncComponentView`: between refreshes that only insert into the
+    * base, the version log proves the window has no closed rows, so it
+    * only expands and appends the base rows inserted since the last
+    * refresh (`_v_min > lastSeen`).
     */
   def refreshComponentView(view: GraftTable, base: GraftTable,
       iteratorExprSql: String, valueCol: String, keepCols: Seq[String]): Long =
-    refreshComponentViewStatus(view, base, iteratorExprSql, valueCol, keepCols).version
-
-  private def refreshComponentViewStatus(view: GraftTable, base: GraftTable,
-      iteratorExprSql: String, valueCol: String,
-      keepCols: Seq[String]): GraftTable.UpdateStatus = {
-    val (lastSeen, epoch) = healAfterRevert(view, base)
-    val baseVersion = base.currentVersion
-    if (baseVersion <= lastSeen)
-      return GraftTable.UpdateStatus(view.currentVersion, 0L, 0L)
-    if (!mightHaveFreshRows(base, lastSeen)) {
-      // delete-only / metadata-only window, proven from the version log:
-      // skip the empty expand+insert job (it minted an empty-file view
-      // version for nothing) and just advance the high-water mark
-      setMark(view, lastSeenKey(base), baseVersion, base, epoch)
-      return GraftTable.UpdateStatus(view.currentVersion, 0L, 0L)
-    }
-    val fresh = base.readWithSystem()
-      .filter(col(GraftTable.VMin) > lastSeen && col(GraftTable.VMax) === GraftTable.Live)
-    val expanded = expand(fresh, iteratorExprSql, valueCol)
-      .select((Seq(col(GraftTable.RowId).as(BaseRowId), col(Pos), col(valueCol)) ++
-        keepCols.map(col)): _*)
-    val st = view.insertStatus(expanded)
-    setMark(view, lastSeenKey(base), baseVersion, base, epoch)
-    st
-  }
+    syncComponentView(view, base, iteratorExprSql, valueCol, keepCols)
 
   /** Full incremental sync: propagate base DELETEs and UPDATEs in addition
     * to inserts (reference update/delete cascade into views,
@@ -153,32 +132,14 @@ object Views {
 
   def syncComponentViewStatus(view: GraftTable, base: GraftTable,
       iteratorExprSql: String, valueCol: String,
-      keepCols: Seq[String]): SyncStats = {
-    val (lastSeen, _) = healAfterRevert(view, base)
-    val baseVersion = base.currentVersion
-    var delWarnings: Seq[String] = Seq.empty
-    var deleted = 0L
-    if (baseVersion > lastSeen && mightHaveClosedRows(base, lastSeen)) {
-      // rows closed (deleted or replaced) after the last sync — must read
-      // history, not the MVCC-visible image, to see them. The closed-rowid
-      // set stays distributed: one anti-join-style rewrite, one view version
-      // (a driver-side collect + chunked IN-deletes would OOM the driver and
-      // mint a version per chunk at scale).
-      val closed = base.readHistory()
-        .filter(col(GraftTable.VMax) > lastSeen &&
-          col(GraftTable.VMax) =!= GraftTable.Live)
-        .select(col(GraftTable.RowId))
-      if (hasClosedRowsCertainly(base, lastSeen) || !closed.isEmpty) {
-        val delSt = view.deleteByKeysStatus(closed, BaseRowId)
-        deleted = delSt.numRows
-        delWarnings = delSt.cacheWarnings
-      }
-    }
-    val st = refreshComponentViewStatus(view, base, iteratorExprSql,
-      valueCol, keepCols)
-    SyncStats(st.version, deleted, st.numRows,
-      cacheWarnings = delWarnings ++ st.cacheWarnings)
-  }
+      keepCols: Seq[String]): SyncStats =
+    sync(view, base, components(iteratorExprSql, valueCol, keepCols))
+
+  private def components(iteratorExprSql: String, valueCol: String,
+      keepCols: Seq[String]): DataFrame => DataFrame = rows =>
+    expand(rows, iteratorExprSql, valueCol)
+      .select((Seq(col(GraftTable.RowId).as(BaseRowId), col(Pos), col(valueCol)) ++
+        keepCols.map(col)): _*)
 
   // ---------- materialized predicate/select views ----------
 
@@ -198,7 +159,7 @@ object Views {
       ColumnDef(f.name, f.dataType.sql.toLowerCase)).toSeq
     val view = GraftTable.create(spark, catalog, name, cols)
     setMark(view, lastSeenKey(base), 0L, base, base.meta.revertEpoch)
-    syncMaterializedView(view, base, whereSql, selectExprs)
+    sync(view, base, mvTransform(_, whereSql, selectExprs))
     view
   }
 
@@ -213,16 +174,36 @@ object Views {
 
   def syncMaterializedViewStatus(view: GraftTable, base: GraftTable,
       whereSql: Option[String],
-      selectExprs: Seq[(String, String)]): SyncStats = {
+      selectExprs: Seq[(String, String)]): SyncStats =
+    sync(view, base, mvTransform(_, whereSql, selectExprs))
+
+  private def mvTransform(rows: DataFrame, whereSql: Option[String],
+      selectExprs: Seq[(String, String)]): DataFrame = {
+    var df = rows
+    whereSql.foreach(w => df = df.filter(expr(w)))
+    df.select((col(GraftTable.RowId).as(BaseRowId) +:
+      selectExprs.map { case (alias, e) => expr(e).as(alias) }): _*)
+  }
+
+  /** The one incremental sync behind both view kinds: heal after a base
+    * revert, delete the view rows of base rows closed since the last sync,
+    * insert `transform` of the base rows opened since, set the mark. The
+    * version-log guards below skip the closed-row and insert passes for
+    * windows the log proves one-sided, and a view at mark 0 (never synced,
+    * or just healed) holds no live row to delete. The closed-rowid set
+    * stays distributed: one anti-join-style rewrite, one view version (a
+    * driver-side collect + chunked IN-deletes would OOM the driver and
+    * mint a version per chunk at scale).
+    */
+  private def sync(view: GraftTable, base: GraftTable,
+      transform: DataFrame => DataFrame): SyncStats = {
     val (lastSeen, epoch) = healAfterRevert(view, base)
     val baseVersion = base.currentVersion
     if (baseVersion <= lastSeen) return SyncStats(view.currentVersion, 0L, 0L)
-    // distributed closed-row propagation — see syncComponentView. The
-    // version-log guards skip the probe/insert JOBS for windows the log
-    // proves one-sided (insert-only syncs ran a closed-row scan and
-    // delete-only syncs an empty expand+insert, one job each for nothing).
-    val delSt =
-      if (!mightHaveClosedRows(base, lastSeen)) None
+    // rows closed (deleted or replaced) after the last sync: only the
+    // history shows them, not the MVCC-visible image
+    val del =
+      if (lastSeen == 0L || !mightHaveClosedRows(base, lastSeen)) None
       else {
         val closed = base.readHistory()
           .filter(col(GraftTable.VMax) > lastSeen &&
@@ -231,26 +212,15 @@ object Views {
         if (!hasClosedRowsCertainly(base, lastSeen) && closed.isEmpty) None
         else Some(view.deleteByKeysStatus(closed, BaseRowId))
       }
-    val st =
-      if (!mightHaveFreshRows(base, lastSeen))
-        GraftTable.UpdateStatus(view.currentVersion, 0L, 0L)
-      else {
-        val fresh = base.readWithSystem()
-          .filter(col(GraftTable.VMin) > lastSeen &&
-            col(GraftTable.VMax) === GraftTable.Live)
-        view.insertStatus(mvTransform(fresh, whereSql, selectExprs))
-      }
+    val ins =
+      if (!mightHaveFreshRows(base, lastSeen)) None
+      else Some(view.insertStatus(transform(base.readWithSystem()
+        .filter(col(GraftTable.VMin) > lastSeen &&
+          col(GraftTable.VMax) === GraftTable.Live))))
     setMark(view, lastSeenKey(base), baseVersion, base, epoch)
-    SyncStats(st.version, delSt.map(_.numRows).getOrElse(0L), st.numRows,
-      cacheWarnings = delSt.toSeq.flatMap(_.cacheWarnings) ++ st.cacheWarnings)
-  }
-
-  private def mvTransform(rows: DataFrame, whereSql: Option[String],
-      selectExprs: Seq[(String, String)]): DataFrame = {
-    var df = rows
-    whereSql.foreach(w => df = df.filter(expr(w)))
-    df.select((col(GraftTable.RowId).as(BaseRowId) +:
-      selectExprs.map { case (alias, e) => expr(e).as(alias) }): _*)
+    SyncStats(view.currentVersion, del.map(_.numRows).getOrElse(0L),
+      ins.map(_.numRows).getOrElse(0L),
+      cacheWarnings = (del ++ ins).toSeq.flatMap(_.cacheWarnings))
   }
 
   // ---------- version-log guards (driver-side, zero Spark jobs) ----------
