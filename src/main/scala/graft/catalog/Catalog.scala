@@ -91,6 +91,10 @@ final case class IndexDef(
     // from the version log by the next maintenance pass), never a
     // permanently missing range
     indexedThrough: Long = 0L,
+    // rows indexed over all segments (hnsw), logged when a segment is
+    // written so a search knows its escalation bound without a job; None
+    // in metas written before the field existed (search sums the segments)
+    rows: Option[Long] = None,
 )
 
 /** Persisted physical-layout policy, applied by `GraftTable.optimize()`
@@ -220,7 +224,9 @@ final class Catalog(val warehouse: String) {
       snapshots = m.snapshots.asInstanceOf[Map[String, Any]].map {
         case (k, v) => k -> v.asInstanceOf[Number].longValue()
       },
-      indexes = Option(m.indexes).getOrElse(Seq.empty),
+      indexes = Option(m.indexes).getOrElse(Seq.empty).map(ix => ix.copy(rows =
+        Option(ix.rows.asInstanceOf[Option[Any]]).flatten.map {
+          case n: Number => n.longValue() })),
       layout = Option(m.layout).flatten,
       versions = m.versions.map(e => e.copy(schema = Option(e.schema).flatten)),
       columns = m.columns.map(c => c.copy(

@@ -2,8 +2,12 @@ package graft.catalog
 
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructType}
+
+import graft.plans.OpValue
 
 /** A versioned, insertable table with computed columns, MVCC row visibility,
   * snapshots, time travel and revert — the Spark-native equivalent of the
@@ -54,11 +58,19 @@ final class GraftTable private (
 
   // ---------- read path ----------
 
-  /** Stored image at `version` (system columns included). */
+  /** Stored image at `version` (system columns included): the rows still
+    * open (`_v_max = Live`) in the files active at `version`. That equals
+    * the row-level `_v_min <= version < _v_max`: files are immutable, and
+    * only `insert` and `rewrite` stamp the version columns, each with
+    * values no later than the version that adds the file, so every row of
+    * an active file has `_v_min <= version` and a closed `_v_max <=
+    * version`. The filter names no version, so the generated code is the
+    * same at every version, and `_v_max = Live` still pushes down.
+    */
   private def storedAt(m: TableMeta, version: Long): DataFrame = {
     val files = m.activeFiles(version)
     if (files.isEmpty) emptyFrame(m)
-    else readFiles(m, files).filter(col(VMin) <= version && col(VMax) > version)
+    else readFiles(m, files).filter(col(VMax) === Live)
   }
 
   /** Stored rows of `files` (manifest paths, physical column names) under
@@ -153,10 +165,24 @@ final class GraftTable private (
     toLogical(storedAt(m, version.getOrElse(m.currentVersion)), m)
   }
 
-  /** Full row history — live AND closed rows, no MVCC visibility filter
-    * (change-data-feed style; used by view maintenance to see deletions).
+  /** Stored rows (live and closed, logical names) of the files that can
+    * hold a row stamped after `since`: the active files the log added
+    * after it. Every row keeps its image in an active file added no
+    * earlier than its stamps (rewrites, compaction and column backfills
+    * copy closed rows along), so a row opened or closed after `since` is
+    * here. An unversioned table's squashed log names no such versions, so
+    * there it is the whole stored image.
     */
-  def readHistory(): DataFrame = storedImage(meta)
+  private[catalog] def storedSince(since: Long): DataFrame = {
+    val m = meta
+    val files = m.activeFiles(m.currentVersion)
+    val added =
+      if (!m.isVersioned) files.toSet
+      else m.versions.filter(_.version > since).flatMap(_.added).toSet
+    val window = files.filter(added)
+    if (window.isEmpty) toLogical(emptyFrame(m), m)
+    else toLogical(readFiles(m, window, files), m)
+  }
 
   /** Change data feed (the Delta/Iceberg CDF analog, read straight off the
     * MVCC row images — no event log to maintain): every row-level change
@@ -364,9 +390,11 @@ final class GraftTable private (
       stored.foreach { c =>
         df = df.withColumn(c.name, expr(c.computedExpr.get).cast(c.dataType))
       }
+      // the version and row-id base ride as OpValues: the same generated
+      // code serves every insert
       df = df
-        .withColumn(RowId, monotonically_increasing_id() + lit(m.nextRowId))
-        .withColumn(VMin, lit(v))
+        .withColumn(RowId, monotonically_increasing_id() + OpValue(m.nextRowId))
+        .withColumn(VMin, OpValue(v))
         .withColumn(VMax, lit(Live))
       val dir = dataDir(v, "insert")
       val out = toPhysical(df, m)
@@ -474,12 +502,15 @@ final class GraftTable private (
     }, opened = false)
 
   /** Delete live rows whose `keyCol` value appears in `keys` (a one-column
-    * DataFrame), fully distributed — the key set is never materialized on
-    * the driver, so a 100M-row delete works the same as a 100-row one, and
-    * exactly ONE table version is minted regardless of key count. File-pruned
-    * copy-on-write like `delete`; only the driver-side file list (not rows)
-    * is collected. The join strategy is left to Catalyst/AQE: small key sets
-    * broadcast, large ones shuffle. Null keys match nothing.
+    * DataFrame); exactly ONE table version is minted regardless of key
+    * count. File-pruned copy-on-write like `delete`. Up to `MaxInlineKeys`
+    * keys of a plain type (integral or string, the column's own type) are
+    * collected once and ride the probe and the rewrite as an IN list, with
+    * no join and no broadcast job. A larger or other-typed key frame stays
+    * distributed — never materialized on the driver, so a 100M-row delete
+    * works the same as a 100-row one — as an IN subquery: a semi-join whose
+    * strategy Catalyst/AQE picks, and which needs no key `distinct`. Null
+    * keys match nothing.
     */
   def deleteByKeys(keys: DataFrame, keyCol: String): Long =
     deleteByKeysStatus(keys, keyCol).version
@@ -487,10 +518,43 @@ final class GraftTable private (
   /** deleteByKeys + UpdateStatus counts (Observation on the rewrite). */
   def deleteByKeysStatus(keys: DataFrame, keyCol: String): GraftTable.UpdateStatus = {
     require(keys.columns.length == 1, "deleteByKeys expects a single-column key frame")
-    val k = keys.toDF("_k").distinct()
-    deleteMarked(img =>
-      (img.join(k, img(keyCol) === k("_k"), "left_outer"), k("_k").isNotNull))
+    deleteKeysStatus(keys, keyCol, inlineKeys(keys, keyCol))
   }
+
+  /** The distinct non-null keys of a one-column frame, collected when there
+    * are at most `MaxInlineKeys` of them, of a plain type equal to
+    * `keyCol`'s; None when the frame must stay distributed. Each partition
+    * hands over at most `MaxInlineKeys + 1` rows in one job (a `limit`
+    * collect scans partitions in rounds, a job each); a local frame is
+    * collected as it is, with no job.
+    */
+  private[catalog] def inlineKeys(keys: DataFrame, keyCol: String): Option[Seq[Any]] = {
+    val t = keys.schema.head.dataType
+    val plain = t match {
+      case LongType | IntegerType | ShortType | ByteType | StringType => true
+      case _ => false
+    }
+    if (!plain || !meta.liveColumns.exists(c =>
+        c.name == keyCol && DataType.fromDDL(c.dataType) == t)) None
+    else {
+      val got = keys.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => keys.collect()
+        case _ => keys.mapPartitions(_.take(MaxInlineKeys + 1))(
+          org.apache.spark.sql.Encoders.row(keys.schema)).collect()
+      }
+      if (got.length > MaxInlineKeys) None
+      else Some(got.iterator.map(_.get(0)).filter(_ != null).toSeq.distinct)
+    }
+  }
+
+  /** deleteByKeys over `keys`, inline when `inline` holds them. */
+  private[catalog] def deleteKeysStatus(keys: DataFrame, keyCol: String,
+      inline: Option[Seq[Any]]): GraftTable.UpdateStatus =
+    deleteMarked(img => (img, inline match {
+      case Some(ks) if ks.isEmpty => lit(false)
+      case Some(ks) => img(keyCol).isInCollection(ks)
+      case None => img(keyCol).isin(keys)
+    }))
 
   /** Update columns on rows matching a predicate; dependent computed columns
     * recompute transitively (reference update cascade, `plan.py:414-485`).
@@ -677,7 +741,14 @@ final class GraftTable private (
     else keyCols.zipWithIndex.map { case (k, i) =>
       // nulls never equi-match; dropping them from the isin set changes
       // nothing (a null-keyed update row stays unmatched either way)
-      val vals = distinctTuples.map(_(i)).filter(_ != null).distinct
+      // a zero key lists both signs: the parquet dictionary filter looks
+      // values up with boxed equality, where -0.0 misses a stored 0.0 (and
+      // a rewritten file of a few rows is dictionary-encoded)
+      val vals = distinctTuples.map(_(i)).filter(_ != null).flatMap {
+        case d: Double if d == 0.0 => Seq(0.0, -0.0)
+        case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
+        case v => Seq(v)
+      }.distinct
       if (vals.isEmpty) lit(false) else col(k).isInCollection(vals)
     }.reduce(_ && _)
   }
@@ -1016,12 +1087,7 @@ final class GraftTable private (
     val policy = layoutPolicy.getOrElse(throw new IllegalStateException(
       s"$name has no layout policy — setLayoutPolicy(...) first"))
     val m = meta
-    val files = m.activeFiles(m.currentVersion)
-    val conf = spark.sessionState.newHadoopConf()
-    val totalBytes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(conf).getFileStatus(p).getLen
-    }.sum
+    val totalBytes = fileBytes(m.activeFiles(m.currentVersion))
     val targetFiles = math.max(1L,
       (totalBytes + policy.targetFileBytes - 1) / policy.targetFileBytes)
       .min(Int.MaxValue.toLong).toInt
@@ -1180,12 +1246,12 @@ final class GraftTable private (
     val m = meta
     require(!m.indexes.exists(_.name == idxName), s"index $idxName exists on $name")
     val path = s"${catalog.warehouse}/$name/index/$idxName"
-    graft.operators.Hnsw.buildIndex(
+    val rows = graft.operators.Hnsw.buildIndex(
       read().filter(col(column).isNotNull), column, idCol, path,
       shards, hnswM, efConstruction)
     commitMeta(m, m.copy(indexes = m.indexes :+ IndexDef(idxName, column,
       idCol, "hnsw", path, shards, hnswM, efConstruction, segmentThreshold,
-      indexedThrough = m.currentVersion)))
+      indexedThrough = m.currentVersion, rows = Some(rows))))
   }
 
   /** Declare an IVF-PQ index over `column` (graft.operators.Pq — the
@@ -1318,14 +1384,19 @@ final class GraftTable private (
     spark.read.option("recursiveFileLookup", "true").parquet(s"$path/codes")
 
   /** ANN search through a declared index. The graphs supply CANDIDATE ids
-    * only; scores come from re-ranking against the LIVE vector column
-    * (`Hnsw.searchRerank`'s broadcast-join shape) — so a row whose
-    * embedding was updated ranks by its NEW vector even while an old
-    * segment still carries the stale one, duplicate candidates from
+    * only; scores come from re-ranking against the LIVE vector column — so
+    * a row whose embedding was updated ranks by its NEW vector even while
+    * an old segment still carries the stale one, duplicate candidates from
     * multiple segments collapse (max score per id), and deleted rows drop
-    * at the join. If heavy deletion leaves fewer than k live hits in the
+    * out. If heavy deletion leaves fewer than k live hits in the
     * over-fetched candidate set, the fetch escalates (×4) until satisfied
     * or the whole index has been considered.
+    *
+    * Each pass collects its candidate ids, then the live candidates'
+    * scores (an IN-list scan, no join), and ranks on the driver; the index
+    * row total comes from the meta (`IndexDef.rows`, summed from the
+    * segments when a meta predates it). The ≤ k hits return as a local
+    * frame, so the caller's action runs no job: an HNSW search is 4 jobs.
     */
   def searchIndex(idxName: String, query: Seq[Double], k: Int,
       ef: Int = 64): DataFrame = {
@@ -1335,6 +1406,7 @@ final class GraftTable private (
     require(ix.kind != "minhash",
       s"index $idxName is a near-dup index — use indexNearDupPairs/searchNearDups")
     import graft.functions.VectorFunctions
+    import spark.implicits._
     val live = read()
       .filter(col(ix.column).isNotNull)
       .select(col(ix.idCol).cast("long").as("vec_id"),
@@ -1344,13 +1416,15 @@ final class GraftTable private (
       if (isPq) Some(graft.operators.Pq.loadModel(spark, s"${ix.path}/model"))
       else None
     val pqCodes = if (isPq) Some(readPqCodes(ix.path)) else None
-    // total indexed rows: code rows (pq) / segment summaries (hnsw)
-    val total =
+    // total indexed rows: code rows (pq) / the logged total, else the
+    // segment summaries (hnsw)
+    val total = ix.rows.getOrElse {
       if (isPq) pqCodes.get.count()
       else {
         val r = graft.operators.Hnsw.readIndex(spark, ix.path).agg(sum(col("n"))).head
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
+    }
     val score = VectorFunctions.cosineSimilarity(col("_vec"),
       VectorFunctions.vectorLit(query))
     var fetch = math.max(4 * k, k + 8).toLong
@@ -1365,18 +1439,27 @@ final class GraftTable private (
           val nprobe = if (probeAll) kc else math.max(1, (kc + 1) / 2)
           graft.operators.Pq.candidates(pqCodes.get, pqModel.get, query,
               fi, nprobe, ix.idCol)
-            .withColumnRenamed(ix.idCol, "vec_id")
+            .select(col(ix.idCol).cast("long"))
         } else graft.operators.Hnsw
-          .search(spark, ix.path, query, fi, math.max(ef, fi))
-          .select(col("vec_id")).dropDuplicates("vec_id")
-      val ranked = live.join(broadcast(cands), Seq("vec_id"))
-        .withColumn("cos_sim", score)
-        .groupBy(col("vec_id")).agg(max(col("cos_sim")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(k)
-      if (fetch >= total && (!isPq || probeAll)) return ranked
-      val got = ranked.count()
-      if (got >= k) return ranked
+          .search(spark, ix.path, query, fi, math.max(ef, fi)).select(col("vec_id"))
+      val ids = cands.as[Long].collect().distinct
+      val liveCands =
+        if (ids.length <= MaxInlineKeys) live.filter(col("vec_id").isInCollection(ids))
+        else live.join(broadcast(ids.toSeq.toDF("vec_id")), Seq("vec_id"), "left_semi")
+      // best live score per candidate id, ranked in Spark's order: score
+      // descending (NaN first, nulls last), then id
+      val best = scala.collection.mutable.HashMap.empty[Long, Option[Double]]
+      if (ids.nonEmpty)
+        liveCands.select(col("vec_id"), score.as("cos_sim"))
+          .as[(Long, Option[Double])].collect()
+          .foreach { case (id, s) =>
+            best(id) = (best.getOrElse(id, None) ++ s).reduceOption(_ max _) }
+      val scoreDesc = Ordering.Option(Ordering.fromLessThan[Double](
+        SQLOrderingUtil.compareDoubles(_, _) < 0)).reverse
+      val ranked = best.toSeq.sortBy { case (id, s) => (s, id) }(
+        Ordering.Tuple2(scoreDesc, Ordering.Long)).take(k)
+      if (ranked.size >= k || (fetch >= total && (!isPq || probeAll)))
+        return ranked.toDF("vec_id", "cos_sim")
       fetch = math.min(total, fetch * 4)
       probeAll = true
     }
@@ -1419,9 +1502,10 @@ final class GraftTable private (
           val newFiles = m.versions
             .filter(e => e.version > ix.indexedThrough && e.version <= cur)
             .flatMap(_.added).distinct
+          var appended = 0L
           if (newFiles.nonEmpty) {
             val newRows = toLogical(readFiles(m, newFiles), m)
-              .filter(col(VMin) > ix.indexedThrough &&
+              .filter(col(VMin) > OpValue(ix.indexedThrough) &&
                 col(ix.column).isNotNull)
             if (ix.kind == "ivfpq") {
               // encode with the EXISTING model — appends never retrain
@@ -1434,8 +1518,8 @@ final class GraftTable private (
                   ix.idCol, ix.m, ix.shards, ix.efConstruction)
                 .write.mode("overwrite").parquet(s"${ix.path}/sigs/seg-v$cur")
             else
-              graft.operators.Hnsw.appendToIndex(newRows, ix.column, ix.idCol,
-                ix.path, ix.m, ix.efConstruction)
+              appended = graft.operators.Hnsw.appendToIndex(newRows, ix.column,
+                ix.idCol, ix.path, ix.m, ix.efConstruction)
           }
           // segment count: code/sig-segment dirs (pq, minhash) / index-table
           // rows (hnsw), the latter from the index files' footers
@@ -1448,8 +1532,8 @@ final class GraftTable private (
             if (ix.kind == "ivfpq") segDirCount("codes")
             else if (ix.kind == "minhash") segDirCount("sigs")
             else rowCountFromFooters(listParquetFiles(ix.path))
-          val path =
-            if (segments <= ix.segmentThreshold) ix.path
+          val (path, rows) =
+            if (segments <= ix.segmentThreshold) (ix.path, ix.rows.map(_ + appended))
             else {
               val fresh = s"${catalog.warehouse}/$name/index/${ix.name}@v$cur"
               val live = read().filter(col(ix.column).isNotNull)
@@ -1461,18 +1545,18 @@ final class GraftTable private (
                 graft.operators.Pq.saveModel(spark, s"$fresh/model", model)
                 graft.operators.Pq.encode(live, ix.column, ix.idCol, model)
                   .write.mode("overwrite").parquet(s"$fresh/codes/seg-init")
-              } else if (ix.kind == "minhash")
+                (fresh, None)
+              } else if (ix.kind == "minhash") {
                 // threshold rebuild re-signs the live image: ghost rows
                 // from updates/deletes drop here
                 graft.operators.Dedup.bandSignatures(live, ix.column,
                     ix.idCol, ix.m, ix.shards, ix.efConstruction)
                   .write.mode("overwrite").parquet(s"$fresh/sigs/seg-init")
-              else
-                graft.operators.Hnsw.buildIndex(live,
-                  ix.column, ix.idCol, fresh, ix.shards, ix.m, ix.efConstruction)
-              fresh
+                (fresh, None)
+              } else (fresh, Some(graft.operators.Hnsw.buildIndex(live,
+                  ix.column, ix.idCol, fresh, ix.shards, ix.m, ix.efConstruction)))
             }
-          ix.copy(path = path, indexedThrough = cur)
+          ix.copy(path = path, indexedThrough = cur, rows = rows)
         }
       }
       if (updated != m.indexes)
@@ -1492,16 +1576,19 @@ final class GraftTable private (
   // ---------- internals ----------
 
   /** The file probe: the manifest files holding live rows `mark` hits —
-    * one scan of the active files, their distinct `input_file_name()`s
-    * collected (taken before `mark`, as a shuffled join loses it).
+    * one scan of the active files whose `input_file_name()`s (taken before
+    * `mark`, as a shuffled join loses it) are deduplicated per partition
+    * and collected: one job, where a global `distinct` costs a shuffle.
     */
   private def touchedFiles(m: TableMeta, mark: Mark): Seq[String] = {
     val files = m.activeFiles(m.currentVersion)
     if (files.isEmpty) return Nil
+    import spark.implicits._
     val (marked, hit) = mark(toLogical(readFiles(m, files), m)
       .withColumn(FileCol, input_file_name()))
     manifestFilesMatching(m, marked.filter(col(VMax) === Live && hit)
-      .select(FileCol).distinct().collect().map(_.getString(0)))
+      .select(FileCol).as[String].mapPartitions(_.toSet.iterator)
+      .collect().toSeq.distinct)
   }
 
   /** map input_file_name() URIs back to their manifest entries */
@@ -1603,10 +1690,14 @@ final class GraftTable private (
     * the `touched` manifest files (with every active file's columns, as the
     * probe saw them), closes the live rows `mark` hits (`_v_max := v`) and,
     * with `reopen`, appends them again with its new values (`_v_min := v`,
-    * cascade applied), in one write. The closed-row count and the reopened
-    * rows' error-cell counts ride that write as one `Observation` (no extra
-    * job). Commits version v adding the written files and removing
-    * `touched`; no touched file commits an empty version.
+    * cascade applied), in one write of about one file per
+    * `spark.sql.files.maxPartitionBytes` of touched input (at least one: a
+    * few small files would otherwise split into a partition, and a file,
+    * each). The closed-row count and the reopened rows' error-cell counts
+    * ride that write as one `Observation` (no extra job). The version v
+    * rides as an `OpValue`, so every rewrite of one shape shares its
+    * generated code. Commits version v adding the written files and
+    * removing `touched`; no touched file commits an empty version.
     */
   private def rewrite(m: TableMeta, op: String, touched: Seq[String], mark: Mark,
       reopen: Option[Reopen] = None): GraftTable.UpdateStatus = {
@@ -1616,20 +1707,25 @@ final class GraftTable private (
     val (marked, hit0) = mark(image)
     val hit = col(VMax) === Live && hit0
     val cols = image.columns.map(col)
-    val closed = marked.withColumn(VMax, when(hit, lit(v)).otherwise(col(VMax)))
+    val ver = OpValue(v)
+    val closed = marked.withColumn(VMax, when(hit, ver).otherwise(col(VMax)))
       .select(cols: _*)
     val out = reopen.fold(closed) { r =>
       val set = r.values(marked.filter(hit))
       closed.union((if (r.cascade) recomputeCascade(set, r.cols.toSet, m) else set)
-        .withColumn(VMin, lit(v)).withColumn(VMax, lit(Live)).select(cols: _*))
+        .withColumn(VMin, ver).withColumn(VMax, lit(Live)).select(cols: _*))
     }
     val leaves = if (reopen.isEmpty) Nil else errorLeafDescriptors(m)
     val obs = org.apache.spark.sql.Observation()
-    val metrics = sum(when(col(VMax) === v, 1L)).as("_n") +:
+    val metrics = sum(when(col(VMax) === ver, 1L)).as("_n") +:
       leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
-        sum(when(col(VMin) === v && isErr, 1L)).as(s"_exc_$i") }
+        sum(when(col(VMin) === ver && isErr, 1L)).as(s"_exc_$i") }
     val dir = dataDir(v, op)
-    val written = toPhysical(out.observe(obs, metrics.head, metrics.tail: _*), m)
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val outFiles = math.max(1L, (fileBytes(touched) + maxBytes - 1) / maxBytes)
+      .min(Int.MaxValue.toLong).toInt
+    val written = toPhysical(out.coalesce(outFiles)
+      .observe(obs, metrics.head, metrics.tail: _*), m)
     written.write.mode("overwrite").parquet(dir)
     commitMetaOrClean(m, m.copy(versions = m.versions :+
       entry(v, op, listParquetFiles(dir), touched, Some(written.schema))), dir)
@@ -1666,6 +1762,15 @@ final class GraftTable private (
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
       try f(file, r.getFooter) finally r.close()
     }
+  }
+
+  /** total size of `files` in bytes (filesystem metadata, no job) */
+  private def fileBytes(files: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }.sum
   }
 
   /** total row count across `files` from parquet footers */
@@ -1855,6 +1960,8 @@ object GraftTable {
 
   /** Ceiling on a `batchUpdate` frame: its rows are collected to the driver. */
   val MaxBatchUpdateRows = 100000
+  /** Ceiling on a key list `deleteByKeys` collects to the driver. */
+  val MaxInlineKeys = 10000
   // wall-clock replay budget for CAS conflicts from out-of-band writers
   // (attempts cost seconds of Spark jobs — budget time, not attempts)
   private val RetryBudgetMs = 120000L

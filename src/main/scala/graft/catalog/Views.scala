@@ -3,6 +3,8 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.OpValue
+
 /** Views over versioned tables:
   *
   *  - predicate/select views (reference `pxt.create_view(base, ...)`,
@@ -187,36 +189,42 @@ object Views {
 
   /** The one incremental sync behind both view kinds: heal after a base
     * revert, delete the view rows of base rows closed since the last sync,
-    * insert `transform` of the base rows opened since, set the mark. The
-    * version-log guards below skip the closed-row and insert passes for
-    * windows the log proves one-sided, and a view at mark 0 (never synced,
-    * or just healed) holds no live row to delete. The closed-rowid set
-    * stays distributed: one anti-join-style rewrite, one view version (a
-    * driver-side collect + chunked IN-deletes would OOM the driver and
-    * mint a version per chunk at scale).
+    * insert `transform` of the base rows opened since, set the mark. Both
+    * passes read only the base files the log added since the mark
+    * (`GraftTable.storedSince`), the version-log guards below skip the
+    * passes for windows the log proves one-sided, and a view at mark 0
+    * (never synced, or just healed) holds no live row to delete. The
+    * closed rowids are collected once when few (their emptiness decides
+    * whether a delete runs at all) and otherwise stay distributed: one
+    * rewrite, one view version either way (a chunked driver-side delete
+    * would mint a version per chunk). The mark rides as an `OpValue`, so
+    * every sync of a view shares its generated code. A sync whose window
+    * closes rows runs 4 jobs: the key collect, the delete's file probe
+    * and rewrite, and the insert.
     */
   private def sync(view: GraftTable, base: GraftTable,
       transform: DataFrame => DataFrame): SyncStats = {
     val (lastSeen, epoch) = healAfterRevert(view, base)
     val baseVersion = base.currentVersion
     if (baseVersion <= lastSeen) return SyncStats(view.currentVersion, 0L, 0L)
+    val mark = OpValue(lastSeen)
+    lazy val window = base.storedSince(lastSeen)
     // rows closed (deleted or replaced) after the last sync: only the
     // history shows them, not the MVCC-visible image
     val del =
       if (lastSeen == 0L || !mightHaveClosedRows(base, lastSeen)) None
       else {
-        val closed = base.readHistory()
-          .filter(col(GraftTable.VMax) > lastSeen &&
-            col(GraftTable.VMax) =!= GraftTable.Live)
+        val closed = window
+          .filter(col(GraftTable.VMax) > mark && col(GraftTable.VMax) =!= GraftTable.Live)
           .select(col(GraftTable.RowId))
-        if (!hasClosedRowsCertainly(base, lastSeen) && closed.isEmpty) None
-        else Some(view.deleteByKeysStatus(closed, BaseRowId))
+        val inline = view.inlineKeys(closed, BaseRowId)
+        if (inline.exists(_.isEmpty)) None
+        else Some(view.deleteKeysStatus(closed, BaseRowId, inline))
       }
     val ins =
       if (!mightHaveFreshRows(base, lastSeen)) None
-      else Some(view.insertStatus(transform(base.readWithSystem()
-        .filter(col(GraftTable.VMin) > lastSeen &&
-          col(GraftTable.VMax) === GraftTable.Live))))
+      else Some(view.insertStatus(transform(window
+        .filter(col(GraftTable.VMin) > mark && col(GraftTable.VMax) === GraftTable.Live))))
     setMark(view, lastSeenKey(base), baseVersion, base, epoch)
     SyncStats(view.currentVersion, del.map(_.numRows).getOrElse(0L),
       ins.map(_.numRows).getOrElse(0L),
@@ -228,13 +236,13 @@ object Views {
   // version in it is a row-closing rewrite (delete/update/batch_update/
   // recompute with files added), and can only contain FRESH rows (_v_min in
   // the window) if some version is a row-opening write (insert, or the
-  // rewritten halves of update/batch_update/recompute). The probes are
+  // rewritten halves of update/batch_update/recompute). The passes are
   // skipped only for ops known not to change row visibility: compact copies
   // rows byte-identical (no new _v_min/_v_max values beyond what their own
   // ops already put in the window) and create and add/drop/rename_column
   // never touch it. Any other op counts as both closing and opening.
   // Unversioned bases squash their log, so the guards stay conservatively
-  // permissive there and the data probes run as before.
+  // permissive there and the data passes run as before.
 
   private val closingOps = Set("delete", "update", "batch_update", "recompute")
   private val openingOps = Set("insert", "update", "batch_update", "recompute")
@@ -257,10 +265,6 @@ object Views {
   /** false ⇒ provably no closed rows in the window (skip the history scan) */
   private def mightHaveClosedRows(base: GraftTable, lastSeen: Long): Boolean =
     !base.meta.isVersioned || opsIn(base, lastSeen, mayClose)
-
-  /** true ⇒ provably SOME closed rows (skip the isEmpty probe job) */
-  private def hasClosedRowsCertainly(base: GraftTable, lastSeen: Long): Boolean =
-    base.meta.isVersioned && opsIn(base, lastSeen, closingOps)
 
   /** false ⇒ provably no rows with `_v_min` in the window (skip the insert) */
   private def mightHaveFreshRows(base: GraftTable, lastSeen: Long): Boolean =

@@ -326,11 +326,16 @@ object Hnsw {
   def readIndex(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.schema(IndexSchema).parquet(indexPath)
 
-  /** One graph per partition of `shardsOf`'s output. */
-  private def shardRows(df: DataFrame, vecCol: String, idCol: String,
-      m: Int, efConstruction: Int)(shardsOf: DataFrame => DataFrame) = {
+  /** One graph per partition of `shardsOf`'s output, written to `path`
+    * in `mode`; returns the rows the written shards hold (an `Observation`
+    * on the write, no extra job).
+    */
+  private def writeShards(df: DataFrame, vecCol: String, idCol: String,
+      m: Int, efConstruction: Int, path: String, mode: String)(
+      shardsOf: DataFrame => DataFrame): Long = {
     val spark = df.sparkSession
     import spark.implicits._
+    val obs = org.apache.spark.sql.Observation()
     shardsOf(df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
@@ -344,36 +349,41 @@ object Hnsw {
         }
       }
       .toDF("shard", "n", "centroid", "min_cos", "graph")
+      .observe(obs, sum(col("n")).as("rows"))
+      .write.mode(mode).parquet(path)
+    Option(obs.get("rows")).collect { case n: java.lang.Long => n.longValue() }
+      .getOrElse(0L)
   }
 
   /** Build the sharded index table: `shards` partitions, one serialized
     * graph per partition plus its pruning summary, written as parquet
-    * (n, centroid, min_cos, graph). Bytes never touch the driver.
+    * (n, centroid, min_cos, graph). Bytes never touch the driver. Returns
+    * the rows indexed.
     */
   def buildIndex(df: DataFrame, vecCol: String, idCol: String, path: String,
-      shards: Int, m: Int = 16, efConstruction: Int = 100): Unit =
-    shardRows(df, vecCol, idCol, m, efConstruction)(
+      shards: Int, m: Int = 16, efConstruction: Int = 100): Long =
+    writeShards(df, vecCol, idCol, m, efConstruction, path, "overwrite")(
       _.repartition(shards, col(idCol))) // deterministic row→shard mapping
-      .write.mode("overwrite").parquet(path)
 
   /** Incremental maintenance: new rows become ONE new shard appended to the
     * index table (the Lucene segment model — inserts never rewrite existing
     * graphs; periodic `buildIndex` over the full table is the compaction).
     * The shard's graph is built over the rows in input order, in the job
-    * that writes it (no shuffle).
+    * that writes it (no shuffle). Returns the rows appended.
     */
   def appendToIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, m: Int = 16, efConstruction: Int = 100): Unit =
-    shardRows(df, vecCol, idCol, m, efConstruction)(_.coalesce(1))
-      .write.mode("append").parquet(path)
+      path: String, m: Int = 16, efConstruction: Int = 100): Long =
+    writeShards(df, vecCol, idCol, m, efConstruction, path, "append")(_.coalesce(1))
 
   /** Search: shard summaries are scored DISTRIBUTED — cos(query, centroid)
     * and the spherical-cap bound are Catalyst expressions over the summary
     * rows, never a driver-side array — and shards that cannot beat the
-    * best shard's kth result are dropped by a broadcast semi-join on the
-    * surviving shard ids (no literal `isin` list, so 10⁵ shards plan the
-    * same as 10). Only two bounded driver materializations remain: the
-    * single best-shard id (one row) and its k seed scores.
+    * best shard's kth result are dropped by a filter on each index row's
+    * own summary columns (no shard-id list, so 10⁵ shards plan the same as
+    * 10, and no broadcast job). Only two bounded driver materializations
+    * remain: the single best-shard id (one row) and its k seed scores. The
+    * best shard id and the threshold τ ride as `OpValue`s, so the
+    * generated code is the same for every query.
     */
   def search(spark: SparkSession, indexPath: String, query: Seq[Double],
       k: Int, ef: Int = 64, prune: Boolean = true): DataFrame = {
@@ -403,15 +413,13 @@ object Hnsw {
         if (best.isEmpty) index
         else {
           val seed = index
-            .filter(col("shard") === best.head)
+            .filter(col("shard") === graft.plans.OpValue(best.head))
             .select(col("graph")).as[Array[Byte]]
             .flatMap(b => deserialize(b).search(q, k, effEf))
             .collect().sortBy(-_._2)
           val tau = if (seed.length < k) -1.0 else seed(k - 1)._2
-          // keep shards whose cap bound can still beat τ — broadcast
-          // semi-join on shard id, fully distributed
-          val keep = sums.filter(bound >= lit(tau - 1e-12)).select(col("shard"))
-          index.join(broadcast(keep), Seq("shard"), "left_semi")
+          // keep shards whose cap bound can still beat τ
+          index.filter(bound >= graft.plans.OpValue(tau - 1e-12))
         }
       }
 

@@ -1,9 +1,14 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Time individual registry queries: `runMain graft.tools.TimeQuery
   * <sfDir> <reps> <name...>`. Same session config + noop-sink protocol as
   * graft.Bench, but scoped to named queries — for bisecting one query's
-  * regression without a 10-minute full-suite run.
+  * regression without a 10-minute full-suite run. Each line also shows the
+  * janino compiles and compile time of the timed reps (Spark's
+  * `CodegenMetrics`), so a query's codegen share shows without a debug log.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -14,12 +19,19 @@ object TimeQuery {
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
       val fn = qs(n)
-      val times = (0 until (reps + 1)).map { _ =>
+      def run(): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      }.drop(1) // first rep is warmup
-      println(f"[time] $n min=${times.min}%.3f all=${times.map(t => f"$t%.3f").mkString(",")}")
+      }
+      run() // warmup
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
+      val times = (0 until reps).map(_ => run())
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+      println(f"[time] $n min=${times.min}%.3f all=${times.map(t => f"$t%.3f").mkString(",")}" +
+        f" compiles=$compiles compile_ms=$compileMs%.0f")
     }
     spark.stop()
   }

@@ -138,13 +138,85 @@ class DmlRewriteSpec extends AnyFunSuite {
     val delete = jobs(t.delete("id % 97 = 5"))
     val batch = jobs(t.batchUpdate(Seq((11L, "y"), (311L, "z")).toDF("id", "text"), Seq("id")))
     val byKeys = jobs(t.deleteByKeys(Seq(12L, 412L).toDF("x"), "id"))
-    assert(update <= 4, s"update ran $update jobs")
-    assert(delete <= 3, s"delete ran $delete jobs")
+    assert(update <= 3, s"update ran $update jobs")
+    assert(delete <= 2, s"delete ran $delete jobs")
     assert(batch <= 5, s"batchUpdate ran $batch jobs")
-    assert(byKeys <= 7, s"deleteByKeys ran $byKeys jobs")
+    assert(byKeys <= 2, s"deleteByKeys ran $byKeys jobs")
     val got = t.read().where("id in (7, 11, 12, 102, 311)")
       .select("id", "text", "n_chars").as[(Long, String, Int)].collect().toSeq.sortBy(_._1)
     assert(got == Seq((7L, "text 7 2?", 9), (11L, "y", 1), (311L, "z", 1)))
+  }
+
+  test("searchIndex and the two view syncs stay within their job budgets") {
+    val cat = freshCatalog()
+    val t = indexed(cat)
+    val iter = "split(text, ' ')"
+    val mvWhere = Some("bucket < 4")
+    val mvSelect = Seq("id" -> "id", "n_chars" -> "n_chars")
+    val tokens = Views.createComponentView(spark, cat, "budget_tokens", t, iter,
+      "token", "string", Seq(ColumnDef("id", "bigint")))
+    val mv = Views.createMaterializedView(spark, cat, "budget_mv", t, mvWhere, mvSelect)
+    def jobs(body: => Any): Int = TestSpark.jobsDuring(body).size
+    def syncViews(): Unit = {
+      Views.syncComponentView(tokens, t, iter, "token", Seq("id"))
+      Views.syncMaterializedView(mv, t, mvWhere, mvSelect)
+    }
+    val q = vec(4242L)
+    t.searchIndex("e", q, 10).collect()
+    // a window that closes rows (update, delete) and opens some (insert)
+    t.update(Map("text" -> "concat(text, '!')"), "id % 50 = 1")
+    t.delete("id % 97 = 2")
+    t.insert(docs(500 until 520))
+    syncViews()
+    t.update(Map("text" -> "concat(text, '?')"), "id % 50 = 7")
+    t.delete("id % 97 = 5")
+    t.insert(docs(520 until 540))
+    val sync = jobs(syncViews())
+    var hits = Seq.empty[Long]
+    val search = jobs { hits = t.searchIndex("e", q, 10).select("vec_id").as[Long].collect().toSeq }
+    // per view: the closed-key collect, the delete's probe and rewrite, the insert
+    assert(sync <= 8, s"the two view syncs ran $sync jobs")
+    // best shard, its seed scores, the pruned shard search, the live
+    // re-rank; the returned frame is local, so the action runs none
+    assert(search <= 4, s"searchIndex and its action ran $search jobs")
+    assert(hits.length == 10)
+    val live = t.read().select("id", "text", "bucket").as[(Long, String, Long)].collect()
+    assert(tokens.read().count() == live.map(_._2.split(" ").length.toLong).sum)
+    assert(mv.read().select("id").as[Long].collect().sorted.toSeq ==
+      live.filter(_._3 < 4).map(_._1).sorted.toSeq)
+  }
+
+  test("a distributed key frame deletes without a key distinct") {
+    val t = keyed(freshCatalog(), Seq(Seq((1L, "a"), (2L, "b")), Seq((3L, "c"), (4L, "d"))))
+    // int keys against a bigint column stay distributed (an IN subquery)
+    val st = t.deleteByKeysStatus(Seq(2, 3, 3, 9).toDF("x"), "id")
+    assert(st.numRows == 2L)
+    assert(ids(t) == Seq(1L, 4L))
+    // past the inline ceiling: distributed as well
+    val many = spark.range(0L, GraftTable.MaxInlineKeys + 10L).toDF("x")
+    assert(t.deleteByKeysStatus(many, "id").numRows == 2L)
+    assert(ids(t).isEmpty)
+  }
+
+  test("a rewrite writes one file per maxPartitionBytes of touched input") {
+    val t = indexed(freshCatalog())
+    // touches 3 of the 5 small files: one file out, not one per file
+    t.update(Map("text" -> "'u'"), "id in (5, 150, 250)")
+    assert(t.meta.versions.last.removed.size == 3)
+    assert(t.meta.versions.last.added.size == 1)
+    t.delete("id in (6, 350)")
+    assert(t.meta.versions.last.removed.size == 2)
+    assert(t.meta.versions.last.added.size == 1)
+    assert(t.meta.activeFiles(t.currentVersion).size == 2)
+    // touched input over the split size: more than one file
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "4096")
+    try t.update(Map("text" -> "'w'"), "id % 100 = 7")
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(t.meta.versions.last.added.size > 1)
+    assert(t.read().where("text = 'w'").count() == 5L)
+    assert(t.read().count() == 498L)
   }
 
   /** files read by each scan of the table rewrite (a write into a

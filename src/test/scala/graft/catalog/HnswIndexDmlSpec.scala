@@ -96,6 +96,37 @@ class HnswIndexDmlSpec extends AnyFunSuite {
     assert(got == bruteTopK(t, q, 10))
   }
 
+  test("logged index row total: escalation under heavy deletion, and a meta without it") {
+    val cat = freshCatalog()
+    val t = mkTable(cat, "ix4b", 300L)
+    t.createHnswIndex("e", "emb", "id", shards = 2)
+    assert(t.meta.indexes.head.rows == Some(300L))
+    t.insert((300L until 340L).map(i => (i, vec(i))).toDF("id", "emb"))
+    assert(t.meta.indexes.head.rows == Some(340L))
+    // delete ~95% of rows: the first over-fetch finds too few live hits
+    t.delete("id % 20 != 0")
+    val q = vec(778L)
+    val got = t.searchIndex("e", q, 10).select("vec_id").as[Long].collect().toSeq
+    assert(got.length == 10, s"expected k=10 live results, got ${got.length}")
+    assert(got == bruteTopK(t, q, 10))
+    // a meta written before the total was logged: search sums the segments
+    val metaFile = java.nio.file.Paths.get(cat.warehouse, "ix4b", "meta.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val tree = mapper.readTree(metaFile.toFile)
+    tree.get("indexes").forEach(ix =>
+      ix.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("rows"))
+    mapper.writeValue(metaFile.toFile, tree)
+    assert(!new String(java.nio.file.Files.readAllBytes(metaFile)).contains("\"rows\""))
+    assert(t.meta.indexes.head.rows.isEmpty)
+    assert(t.searchIndex("e", q, 10).select("vec_id").as[Long].collect().toSeq == got)
+    // appends keep an unknown total unknown
+    t.insert((340L until 360L).map(i => (i, vec(i))).toDF("id", "emb"))
+    assert(t.meta.indexes.head.rows.isEmpty)
+    val q2 = vec(779L)
+    assert(t.searchIndex("e", q2, 10).select("vec_id").as[Long].collect().toSeq ==
+      bruteTopK(t, q2, 10))
+  }
+
   test("segment threshold triggers rebuild into a fresh dir via CAS swap") {
     val cat = freshCatalog()
     val t = mkTable(cat, "ix5", 100L)

@@ -196,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          Hnsw.appendToIndex(batch, "embedding", "vec_id", idx)
+          Hnsw.appendToIndex(batch, "embedding", "vec_id", idx): Unit
       }
       .start()
     q.awaitTermination(120000)
