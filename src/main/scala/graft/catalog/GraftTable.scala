@@ -504,13 +504,14 @@ final class GraftTable private (
   /** Delete live rows whose `keyCol` value appears in `keys` (a one-column
     * DataFrame); exactly ONE table version is minted regardless of key
     * count. File-pruned copy-on-write like `delete`. Up to `MaxInlineKeys`
-    * keys of a plain type (integral or string, the column's own type) are
-    * collected once and ride the probe and the rewrite as an IN list, with
-    * no join and no broadcast job. A larger or other-typed key frame stays
-    * distributed — never materialized on the driver, so a 100M-row delete
-    * works the same as a 100-row one — as an IN subquery: a semi-join whose
-    * strategy Catalyst/AQE picks, and which needs no key `distinct`. Null
-    * keys match nothing.
+    * distinct keys of a plain type (integral or string, the column's own
+    * type) are collected once (`inlineKeys`) and ride the probe and the
+    * rewrite as an IN list, with no join and no broadcast job. A larger or
+    * other-typed key frame stays distributed — the driver never receives
+    * more than `MaxInlineKeys` of its keys, so a 100M-row delete works the
+    * same as a 100-row one — as an IN subquery: a semi-join whose strategy
+    * Catalyst/AQE picks, and which needs no key `distinct`. Null keys match
+    * nothing.
     */
   def deleteByKeys(keys: DataFrame, keyCol: String): Long =
     deleteByKeysStatus(keys, keyCol).version
@@ -523,10 +524,11 @@ final class GraftTable private (
 
   /** The distinct non-null keys of a one-column frame, collected when there
     * are at most `MaxInlineKeys` of them, of a plain type equal to
-    * `keyCol`'s; None when the frame must stay distributed. Each partition
-    * hands over at most `MaxInlineKeys + 1` rows in one job (a `limit`
-    * collect scans partitions in rounds, a job each); a local frame is
-    * collected as it is, with no job.
+    * `keyCol`'s; None when the frame must stay distributed. One job: each
+    * partition gathers its distinct keys and stops reading past the
+    * ceiling, the partial sets merge on executors, and the driver receives
+    * one set of at most `MaxInlineKeys` keys, or None. A local frame is
+    * read as it is, with no job.
     */
   private[catalog] def inlineKeys(keys: DataFrame, keyCol: String): Option[Seq[Any]] = {
     val t = keys.schema.head.dataType
@@ -536,15 +538,14 @@ final class GraftTable private (
     }
     if (!plain || !meta.liveColumns.exists(c =>
         c.name == keyCol && DataType.fromDDL(c.dataType) == t)) None
-    else {
-      val got = keys.queryExecution.optimizedPlan match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => keys.collect()
-        case _ => keys.mapPartitions(_.take(MaxInlineKeys + 1))(
-          org.apache.spark.sql.Encoders.row(keys.schema)).collect()
-      }
-      if (got.length > MaxInlineKeys) None
-      else Some(got.iterator.map(_.get(0)).filter(_ != null).toSeq.distinct)
-    }
+    else (keys.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        GraftTable.cappedKeys(keys.collect().iterator.map(_.get(0)))
+      case _ =>
+        keys.rdd.mapPartitions(rows => Iterator(GraftTable.cappedKeys(rows.map(_.get(0)))))
+          .treeAggregate(Option(Set.empty[Any]), GraftTable.mergeKeys, GraftTable.mergeKeys,
+            2, true)
+    }).map(_.toSeq)
   }
 
   /** deleteByKeys over `keys`, inline when `inline` holds them. */
@@ -742,13 +743,18 @@ final class GraftTable private (
       // nulls never equi-match; dropping them from the isin set changes
       // nothing (a null-keyed update row stays unmatched either way)
       // a zero key lists both signs: the parquet dictionary filter looks
-      // values up with boxed equality, where -0.0 misses a stored 0.0 (and
-      // a rewritten file of a few rows is dictionary-encoded)
+      // values up with Double.equals, where -0.0 and 0.0 miss each other
+      // (and a rewritten file of a few rows is dictionary-encoded). Scala's
+      // `==` holds 0.0 == -0.0, so duplicates drop by bit pattern.
       val vals = distinctTuples.map(_(i)).filter(_ != null).flatMap {
         case d: Double if d == 0.0 => Seq(0.0, -0.0)
         case f: Float if f == 0.0f => Seq(0.0f, -0.0f)
         case v => Seq(v)
-      }.distinct
+      }.distinctBy {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case f: Float => java.lang.Float.floatToIntBits(f)
+        case v => v
+      }
       if (vals.isEmpty) lit(false) else col(k).isInCollection(vals)
     }.reduce(_ && _)
   }
@@ -1087,7 +1093,12 @@ final class GraftTable private (
     val policy = layoutPolicy.getOrElse(throw new IllegalStateException(
       s"$name has no layout policy — setLayoutPolicy(...) first"))
     val m = meta
-    val totalBytes = fileBytes(m.activeFiles(m.currentVersion))
+    val files = m.activeFiles(m.currentVersion)
+    val conf = spark.sessionState.newHadoopConf()
+    val totalBytes = files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }.sum
     val targetFiles = math.max(1L,
       (totalBytes + policy.targetFileBytes - 1) / policy.targetFileBytes)
       .min(Int.MaxValue.toLong).toInt
@@ -1443,9 +1454,7 @@ final class GraftTable private (
         } else graft.operators.Hnsw
           .search(spark, ix.path, query, fi, math.max(ef, fi)).select(col("vec_id"))
       val ids = cands.as[Long].collect().distinct
-      val liveCands =
-        if (ids.length <= MaxInlineKeys) live.filter(col("vec_id").isInCollection(ids))
-        else live.join(broadcast(ids.toSeq.toDF("vec_id")), Seq("vec_id"), "left_semi")
+      val liveCands = live.filter(col("vec_id").isInCollection(ids))
       // best live score per candidate id, ranked in Spark's order: score
       // descending (NaN first, nulls last), then id
       val best = scala.collection.mutable.HashMap.empty[Long, Option[Double]]
@@ -1690,14 +1699,18 @@ final class GraftTable private (
     * the `touched` manifest files (with every active file's columns, as the
     * probe saw them), closes the live rows `mark` hits (`_v_max := v`) and,
     * with `reopen`, appends them again with its new values (`_v_min := v`,
-    * cascade applied), in one write of about one file per
-    * `spark.sql.files.maxPartitionBytes` of touched input (at least one: a
-    * few small files would otherwise split into a partition, and a file,
-    * each). The closed-row count and the reopened rows' error-cell counts
-    * ride that write as one `Observation` (no extra job). The version v
-    * rides as an `OpValue`, so every rewrite of one shape shares its
-    * generated code. Commits version v adding the written files and
-    * removing `touched`; no touched file commits an empty version.
+    * cascade applied), in one write. The closed rows write about one file
+    * per `spark.sql.files.maxPartitionBytes` of touched input (at least
+    * one: a few small files would otherwise split into a partition, and a
+    * file, each). The reopened rows get new values, from a set expression
+    * or a stored computed column that may call a model, in the same stage
+    * as the write, so they keep a partition per core (`defaultParallelism`)
+    * where the input has them. The closed-row count and the reopened rows'
+    * error-cell counts ride that write as one `Observation` (no extra
+    * job). The version v rides as an `OpValue`, so every rewrite of one
+    * shape shares its generated code. Commits version v adding the written
+    * files and removing `touched`; no touched file commits an empty
+    * version.
     */
   private def rewrite(m: TableMeta, op: String, touched: Seq[String], mark: Mark,
       reopen: Option[Reopen] = None): GraftTable.UpdateStatus = {
@@ -1710,10 +1723,15 @@ final class GraftTable private (
     val ver = OpValue(v)
     val closed = marked.withColumn(VMax, when(hit, ver).otherwise(col(VMax)))
       .select(cols: _*)
-    val out = reopen.fold(closed) { r =>
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    val bySize = math.max(1L, (scannedBytes(image) + maxBytes - 1) / maxBytes)
+      .min(Int.MaxValue.toLong).toInt
+    val out = reopen.fold(closed.coalesce(bySize)) { r =>
       val set = r.values(marked.filter(hit))
-      closed.union((if (r.cascade) recomputeCascade(set, r.cols.toSet, m) else set)
-        .withColumn(VMin, ver).withColumn(VMax, lit(Live)).select(cols: _*))
+      val reopened = (if (r.cascade) recomputeCascade(set, r.cols.toSet, m) else set)
+        .withColumn(VMin, ver).withColumn(VMax, lit(Live)).select(cols: _*)
+      closed.coalesce(bySize)
+        .union(reopened.coalesce(math.max(bySize, spark.sparkContext.defaultParallelism)))
     }
     val leaves = if (reopen.isEmpty) Nil else errorLeafDescriptors(m)
     val obs = org.apache.spark.sql.Observation()
@@ -1721,10 +1739,7 @@ final class GraftTable private (
       leaves.zipWithIndex.map { case ((_, _, isErr), i) =>
         sum(when(col(VMin) === ver && isErr, 1L)).as(s"_exc_$i") }
     val dir = dataDir(v, op)
-    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    val outFiles = math.max(1L, (fileBytes(touched) + maxBytes - 1) / maxBytes)
-      .min(Int.MaxValue.toLong).toInt
-    val written = toPhysical(out.coalesce(outFiles)
+    val written = toPhysical(out
       .observe(obs, metrics.head, metrics.tail: _*), m)
     written.write.mode("overwrite").parquet(dir)
     commitMetaOrClean(m, m.copy(versions = m.versions :+
@@ -1764,14 +1779,15 @@ final class GraftTable private (
     }
   }
 
-  /** total size of `files` in bytes (filesystem metadata, no job) */
-  private def fileBytes(files: Seq[String]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(conf).getFileStatus(p).getLen
+  /** bytes of the files `df` scans, from the listing its read already made */
+  private def scannedBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
+        case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          r.location.sizeInBytes
+        case _ => 0L
+      }
     }.sum
-  }
 
   /** total row count across `files` from parquet footers */
   private def rowCountFromFooters(files: Seq[String]): Long =
@@ -1960,8 +1976,23 @@ object GraftTable {
 
   /** Ceiling on a `batchUpdate` frame: its rows are collected to the driver. */
   val MaxBatchUpdateRows = 100000
-  /** Ceiling on a key list `deleteByKeys` collects to the driver. */
+  /** Ceiling on the key list `deleteByKeys` and view sync collect to the driver. */
   val MaxInlineKeys = 10000
+
+  /** The distinct non-null values of `it`, None past `MaxInlineKeys`
+    * (reading stops there).
+    */
+  private def cappedKeys(it: Iterator[Any]): Option[Set[Any]] = {
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    while (it.hasNext && seen.size <= MaxInlineKeys) {
+      val v = it.next()
+      if (v != null) seen += v
+    }
+    if (seen.size > MaxInlineKeys) None else Some(seen.toSet)
+  }
+
+  private def mergeKeys(a: Option[Set[Any]], b: Option[Set[Any]]): Option[Set[Any]] =
+    for (x <- a; y <- b; u = x ++ y if u.size <= MaxInlineKeys) yield u
   // wall-clock replay budget for CAS conflicts from out-of-band writers
   // (attempts cost seconds of Spark jobs — budget time, not attempts)
   private val RetryBudgetMs = 120000L

@@ -1,7 +1,9 @@
 package graft.catalog
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.execution.{DataSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -198,25 +200,69 @@ class DmlRewriteSpec extends AnyFunSuite {
     assert(ids(t).isEmpty)
   }
 
+  test("inlineKeys hands the driver one capped key set, whatever the partitions") {
+    val t = keyed(freshCatalog(), Seq(Seq((1L, "a"))))
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.taskMetrics != null) {
+          tasks.incrementAndGet(); bytes.addAndGet(e.taskMetrics.resultSize)
+        }
+    }
+    /** the keys, and the result tasks and bytes that reached the driver */
+    def inline(keys: DataFrame): (Option[Set[Any]], Int, Long) = {
+      tasks.set(0); bytes.set(0L)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val got = t.inlineKeys(keys, "id").map(_.toSet)
+        // the listener bus is async: poll until the task count settles
+        var last = -1
+        var stable = 0
+        var waited = 0
+        while ((stable < 3 || last == 0) && waited < 15000) {
+          Thread.sleep(100); waited += 100
+          val cur = tasks.get()
+          if (cur == last) stable += 1 else { stable = 0; last = cur }
+        }
+        (got, tasks.get(), bytes.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // 8 partitions of 2,000 distinct keys: each is under the ceiling, all
+    // of them over it; the driver gets one small answer, not 16,000 keys
+    val (over, overTasks, overBytes) = inline(spark.range(0L, 16000L, 1L, 8).toDF("x"))
+    assert(over.isEmpty)
+    assert(overTasks == 1 && overBytes < 4096,
+      s"the driver received $overBytes bytes from $overTasks result tasks")
+    // under the ceiling: one set of the distinct non-null keys
+    val (under, underTasks, _) = inline(spark.range(0L, 400L, 1L, 8)
+      .select(when($"id" < 390L, $"id" % 300L).as("x")))
+    assert(under.contains((0L until 300L).toSet[Any]))
+    assert(underTasks == 1)
+  }
+
   test("a rewrite writes one file per maxPartitionBytes of touched input") {
     val t = indexed(freshCatalog())
-    // touches 3 of the 5 small files: one file out, not one per file
-    t.update(Map("text" -> "'u'"), "id in (5, 150, 250)")
-    assert(t.meta.versions.last.removed.size == 3)
-    assert(t.meta.versions.last.added.size == 1)
+    def last = t.meta.versions.last
+    // a delete touching 2 of the 5 small files: one file out, not one per file
     t.delete("id in (6, 350)")
-    assert(t.meta.versions.last.removed.size == 2)
-    assert(t.meta.versions.last.added.size == 1)
-    assert(t.meta.activeFiles(t.currentVersion).size == 2)
+    assert(last.removed.size == 2 && last.added.size == 1)
+    assert(t.meta.activeFiles(t.currentVersion).size == 4)
+    // an update touching 3 files: its closed rows write one file; its
+    // reopened rows recompute `n_chars` in the write's stage, so they keep
+    // their 3 partitions (up to one per core; TestSpark runs 4)
+    t.update(Map("text" -> "'u'"), "id in (5, 150, 250)")
+    assert(last.removed.size == 3)
+    assert(last.added.size == 4, s"update wrote ${last.added}")
     // touched input over the split size: more than one file
     val key = "spark.sql.files.maxPartitionBytes"
     val before = spark.conf.getOption(key)
     spark.conf.set(key, "4096")
-    try t.update(Map("text" -> "'w'"), "id % 100 = 7")
+    try t.delete("id % 100 = 7")
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    assert(t.meta.versions.last.added.size > 1)
-    assert(t.read().where("text = 'w'").count() == 5L)
-    assert(t.read().count() == 498L)
+    assert(last.added.size > 1)
+    assert(t.read().where("text = 'u'").count() == 3L)
+    assert(t.read().count() == 493L)
   }
 
   /** files read by each scan of the table rewrite (a write into a

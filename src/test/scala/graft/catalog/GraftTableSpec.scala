@@ -205,6 +205,23 @@ class GraftTableSpec extends AnyFunSuite {
     assert(t.read().count() == 3)
   }
 
+  test("batchUpdate finds a stored -0.0 key by either zero") {
+    val t = GraftTable.create(spark, freshCatalog(), "t9c", Seq(
+      ColumnDef("d", "double"), ColumnDef("v", "bigint")))
+    // a file of a few rows is dictionary-encoded: the probe's pushed key
+    // list must name -0.0 itself for the dictionary filter to keep it
+    t.insert(Seq((-0.0, 1L), (2.5, 2L)).toDF("d", "v"))
+    def vs = t.read().orderBy("v").select("v").as[Long].collect().toSeq
+    t.batchUpdate(Seq((-0.0, 10L)).toDF("d", "v"), Seq("d"))
+    assert(vs == Seq(2L, 10L))
+    t.batchUpdate(Seq((0.0, 20L)).toDF("d", "v"), Seq("d"))
+    assert(vs == Seq(2L, 20L))
+    // past ten values the IN list becomes a hash set
+    val many = (1 to 12).map(i => (i + 100.5, 0L)) :+ ((0.0, 30L))
+    t.batchUpdate(many.toDF("d", "v"), Seq("d"), ifNotExists = "ignore")
+    assert(vs == Seq(2L, 30L))
+  }
+
   test("delete rewrites only files containing matching rows") {
     val t = GraftTable.create(spark, freshCatalog(), "t10", cols)
     t.insert(Seq((1L, "a", 1.0)).toDF("id", "name", "score"))
