@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** One operator-inventory query: a Spark implementation plus (optionally) a
   * DuckDB-oracle SQL producing identical rows/columns on the same parquet
@@ -126,45 +130,126 @@ object QueryUtil {
     stage
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to the gate-stream
-    * value (conf `graft.gate.streamPartitions`, default 4), restoring the
-    * previous value after. A streaming query fixes its STATE-STORE
-    * partition count from this conf at first start; the bench session's 32
-    * local-mode partitions mean every micro-batch of every gate stream
-    * commits 32 state-store partitions (plus 32-task stateful stages) for
-    * fixtures of <100 rows and ≤256 state keys — measured 25 s/stream at
-    * 32 partitions vs 5 s at 4 on q184's shape (r15 Scratch capture).
-    * State-partition count is a state-size/key-cardinality decision, not a
-    * core-count one: production deployments of the same operators size it
-    * to their key space via the same conf at their own stream start; the
-    * gates size it to their fixture. Same set/restore discipline as
-    * q203's provider override.
+  /** State-store partition count of a gate stream. A streaming query fixes
+    * its state-store partition count from `spark.sql.shuffle.partitions`
+    * at first start; the bench session's 32 local-mode partitions mean
+    * every micro-batch of every gate stream commits 32 state-store
+    * partitions (plus 32-task stateful stages) for fixtures of <100 rows
+    * and ≤256 state keys — measured 25 s/stream at 32 partitions vs 5 s at
+    * 4 on q184's shape. State-partition count is a state-size decision,
+    * not a core-count one: production deployments of the same operators
+    * size it to their key space at their own stream start; the gates size
+    * it to their fixture.
+    */
+  val GateStreamPartitions: Int = 4
+
+  /** Run `body` with `spark.sql.shuffle.partitions` set to
+    * [[GateStreamPartitions]], restoring the previous value after.
     */
   def withGateStreamPartitions[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    val n = s.conf.getOption("graft.gate.streamPartitions").getOrElse("4")
     val old = s.conf.getOption(key)
-    s.conf.set(key, n)
+    s.conf.set(key, GateStreamPartitions.toString)
     try body finally old.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   /** Fan-out width for map-heavy work fed by a SINGLE-file staged fixture
     * (one parquet row group → one scan partition → one task does all the
-    * gram/decode work). Conf `graft.gate.fanoutPartitions`, default 32.
+    * gram/decode work).
     *
-    * Deliberately a FIXED default rather than `defaultParallelism` (guide
-    * §2.2 wants no core-count literals in query paths — this is the
-    * parameterized replacement for the old bare `repartition(32, ...)`):
-    * the driver verifies and benches the SAME queries at 32, 8 and 4
-    * cores, and a width that floats with the session would change the
-    * row→partition assignment and therefore the accumulation order of
-    * every rounded double aggregate downstream — a correctness hazard for
-    * oracle hash checks, not a tuning choice. Production sizes the conf to
-    * its own cluster; at real scale the input is many files and the scan
-    * parallelizes without this fan-out anyway.
+    * Deliberately FIXED rather than `defaultParallelism`: the same queries
+    * are verified and benched at 32, 8 and 4 cores, and a width that
+    * floats with the session would change the row→partition assignment
+    * and therefore the accumulation order of every rounded double
+    * aggregate downstream — a correctness hazard for oracle hash checks,
+    * not a tuning choice. At real scale the input is many files and the
+    * scan parallelizes without this fan-out anyway.
     */
-  def fanout(s: SparkSession): Int =
-    s.conf.getOption("graft.gate.fanoutPartitions").map(_.toInt).getOrElse(32)
+  val Fanout: Int = 32
+
+  /** Replay the parquet files staged in `stage` through `query`, one file
+    * per micro-batch in modification-time order, to completion
+    * (`Trigger.AvailableNow`) under [[withGateStreamPartitions]], from a
+    * fresh checkpoint unless `checkpoint` names one; `sink` picks the sink
+    * (format, path or name, or a foreachBatch).
+    */
+  def replayStream(s: SparkSession, stage: java.nio.file.Path,
+      outputMode: String = "append",
+      checkpoint: String = tempDir("gate_ck").toString)(
+      query: DataFrame => DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withGateStreamPartitions(s) {
+      val in = s.readStream.schema(stagedSchema(s, stage))
+        .option("maxFilesPerTrigger", "1").parquet(stage.toString)
+      sink(query(in).writeStream.outputMode(outputMode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
+    }
+
+  /** The schema Spark wrote into the footer of the first parquet file in
+    * `stage`, read on the driver: `spark.read.parquet(dir).schema` infers
+    * the same schema but runs a Spark job to do it. Nullable throughout,
+    * like a file-source read.
+    */
+  private def stagedSchema(s: SparkSession,
+      stage: java.nio.file.Path): StructType = {
+    val file = new java.io.File(stage.toString).listFiles()
+      .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toURI), s.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+    require(json != null, s"stagedSchema: $file was not written by Spark")
+    StructType(DataType.fromJson(json).asInstanceOf[StructType]
+      .map(_.copy(nullable = true)))
+  }
+
+  /** [[replayStream]] into a uniquely named memory sink; returns its table. */
+  def replayToMemory(s: SparkSession, stage: java.nio.file.Path,
+      outputMode: String = "append")(query: DataFrame => DataFrame): DataFrame = {
+    val name = "gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    replayStream(s, stage, outputMode)(query)(_.format("memory").queryName(name))
+    s.table(name)
+  }
+
+  /** Checkpoint-restart parity of a stateful replay. The files staged in
+    * `side` land in a live dir in name order: incarnation 1 replays the
+    * first two of them into a parquet sink and stops; the rest land
+    * and incarnation 2 resumes from the same checkpoint (committed offsets
+    * plus the state store reloaded off disk). Both incarnations run on
+    * `run`; beside incarnation 2, a control replays every file from a
+    * fresh checkpoint on `s`. Returns the parquet sink and whether it holds
+    * `rows` rows equal to the control's as a multiset (compared on the
+    * driver: gate sinks are tens of rows).
+    */
+  def restartParity(s: SparkSession, run: SparkSession,
+      side: java.nio.file.Path, rows: Int)(
+      query: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    val stage = tempDir("restart_in")
+    val files = new java.io.File(side.toString).list().sorted
+    def land(names: Seq[String]): Unit = names.foreach(n =>
+      java.nio.file.Files.move(side.resolve(n), stage.resolve(n)))
+    val ck = tempDir("restart_ck").toString
+    val out = tempDir("restart_out").toString
+    def incarnation(): Unit = replayStream(run, stage, checkpoint = ck)(query)(
+      _.format("parquet").option("path", out))
+    land(files.take(2).toSeq)
+    incarnation()
+    land(files.drop(2).toSeq)
+    // incarnation 2 and the control are independent streams, run
+    // overlapped; both sessions hold the gate partition count across the
+    // pair, so one thread's restore cannot land before the other's start
+    val Seq(restarted, control) =
+      withGateStreamPartitions(s)(withGateStreamPartitions(run)(
+        inParallel(Seq(() => { incarnation(); s.read.parquet(out) },
+          () => replayToMemory(s, stage)(query)))))
+    def multiset(rs: Array[Row]) = rs.groupBy(identity).view.mapValues(_.length).toMap
+    val restRows = restarted.collect()
+    (restarted, restRows.length == rows &&
+      multiset(restRows) == multiset(control.collect()))
+  }
 
   /** Run independent thunks concurrently and return their results in
     * order (guide §2.6: Spark's scheduler overlaps jobs submitted from

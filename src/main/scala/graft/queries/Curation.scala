@@ -284,7 +284,7 @@ object Curation {
         // heavy bigram explode out across cores (at 100 TB inputs arrive
         // pre-split; this shuffle is KBs here); computed ONCE for both the
         // model aggregation and the scoring join via the shared lineage
-        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val bg = docs.select(col("doc_id"),
           explode(when(length(col("text")) >= 2,
             transform(sequence(lit(1), length(col("text")) - 1),
@@ -322,7 +322,7 @@ object Curation {
         // huge → hash-shuffle balances; the oracle is the identical
         // relational pipeline in DuckDB.
         // single-row-group input: fan the gram explosion out across cores
-        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val toks = docs.select(col("doc_id"),
           split(trim(col("text")), "\\s+").as("w"))
         val grams = toks.select(col("doc_id"), col("w"),
@@ -375,7 +375,7 @@ object Curation {
         // back, so the pass stays map-only after the score aggregation.
         // Scores and cutoffs are BOTH rounded to 4 dp before the bucket
         // compare — the gate must be engine-reproducible at the boundary.
-        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val bg = docs.select(col("doc_id"), col("lang"),
           explode(when(length(col("text")) >= 2,
             transform(sequence(lit(1), length(col("text")) - 1),
@@ -427,7 +427,7 @@ object Curation {
         // (doc, position) and a per-doc ordered reassembly — collect_list
         // groups only a single document's tokens, never a corpus-wide sort.
         // single-row-group input: fan the gram explosion out across cores
-        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val toks = docs.select(col("doc_id"),
           split(trim(col("text")), "\\s+").as("w"))
         val grams = toks.select(col("doc_id"), col("w"),
@@ -496,7 +496,7 @@ object Curation {
         // micro-units BEFORE the per-doc sum, so the aggregation is
         // order-independent exact integer math and the gate hash-matches.
         val k = 1024
-        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+        val docs = T(s, dir, "documents").repartition(graft.QueryUtil.Fanout, col("doc_id"))
           .select(col("doc_id"), col("lang"),
             split(trim(col("text")), "\\s+").as("w"))
         val uni = docs.select(col("doc_id"), col("lang"), explode(col("w")).as("f"))

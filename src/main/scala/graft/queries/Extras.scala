@@ -90,7 +90,7 @@ object Extras {
         T(s, dir, "lineitem")
           // one-row-group file: fan the percentile/corr buffering across
           // tasks (partial aggregation still combines map-side)
-          .repartition(graft.QueryUtil.fanout(s), col("l_orderkey"))
+          .repartition(graft.QueryUtil.Fanout, col("l_orderkey"))
           .agg(
           round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
           round(stddev_samp(col("l_quantity")), 6).as("sd_q"),
@@ -423,7 +423,7 @@ object Extras {
         T(s, dir, "orders")
           // the corpus file is one row group (unsplittable): fan the
           // JSON-parse work across tasks instead of one scan task
-          .repartition(graft.QueryUtil.fanout(s), col("o_orderkey"))
+          .repartition(graft.QueryUtil.Fanout, col("o_orderkey"))
           .withColumn("js", js)
           .select(
             col("o_orderkey"),
@@ -454,7 +454,7 @@ object Extras {
         // NULL cells plus an errortype marker, never task failure.
         val divisor = col("o_orderkey") % 3
         T(s, dir, "orders")
-          .repartition(graft.QueryUtil.fanout(s), col("o_orderkey")) // one-row-group file: fan out
+          .repartition(graft.QueryUtil.Fanout, col("o_orderkey")) // one-row-group file: fan out
           .select(
             col("o_orderkey"),
             round(try_divide(col("o_totalprice"), divisor), 6).as("td"),
@@ -3453,101 +3453,24 @@ object Extras {
       "q184_stream_neardup",
       (s, dir) => {
         // Streaming near-dup ORACLE gate: `Streaming.nearDupStream` (the
-        // flatMapGroupsWithState simhash-bucket operator, previously
-        // spec-only) replayed over a staged corpus with maxHamming = 0 —
-        // exact-signature semantics, so the DuckDB oracle reproduces the
-        // ENTIRE operator bit-for-bit: simhash16 is a per-token md5-bit
-        // vote (TextFunctions.simhash16), recomputed in SQL from the same
-        // md5 hex digits, and dup_of is the earliest prior doc with the
-        // same 16-bit signature (a window over sig). Duplicates exist by
-        // construction (every doc_id % 3 == 2 doc streams doc_id-2's
-        // text); signature collisions across different texts are NOT a
-        // gate hazard because the oracle models the signature itself, not
-        // text equality. Scale shape: state is O(buckets x cap), keyed
-        // shuffle only — the streaming form of q35's batch simhash dedup.
-        import org.apache.spark.sql.streaming.Trigger
-        val base = T(s, dir, "documents")
-          .filter(col("doc_id") < 60)
-          .withColumn("norm", expr(
-            """array_join(filter(transform(
-              |  slice(split(trim(lower(text)), '\\s+'), 1,
-              |        cast(doc_id % 5 + 6 as int)),
-              |  t -> regexp_replace(t, '[^a-z0-9]', '')),
-              |  x -> x != ''), ' ')""".stripMargin))
-          .select(col("doc_id"), col("norm"))
-        val staged = base.alias("a")
-          .join(base.alias("b"), col("b.doc_id") === col("a.doc_id") - 2,
-            "left")
-          .select(col("a.doc_id").as("doc_id"),
-            when(col("a.doc_id") % 3 === 2 && col("b.norm").isNotNull,
-              col("b.norm")).otherwise(col("a.norm")).as("text"))
-        // stage as SIX mtime-ordered files replayed one per micro-batch
-        // (maxFilesPerTrigger=1): dup state must SURVIVE the batch
-        // boundary — cross-batch pairs like (18, 20) only resolve through
-        // the persisted state store, which a single-batch replay would
-        // never exercise. File order = doc_id order (the oracle's
-        // processing-order assumption) via explicit modification times.
-        // Staged in ONE partitionBy job; stream runs under the gate
-        // state-partition override (r15, see QueryUtil for both).
-        val stage = graft.QueryUtil.stageStreamFiles(staged,
-          (col("doc_id") / 10).cast("int"), 6, "q184_in",
-          1_000_000_000_000L)
-        val qname = "q184_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage.toString).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-          val verdicts = graft.streaming.Streaming
-            .nearDupStream(stream, "doc_id", "text", maxHamming = 0)
-          val ck = graft.QueryUtil.tempDir("q184_ck").toString
-          val sq = verdicts.toDF().writeStream.format("memory")
-            .queryName(qname).outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
-        s.table(qname)
-          .select(col("doc_id"), col("simhash").as("sig"),
-            (col("dup_of") =!= -1L).as("is_dup"), col("dup_of"))
-          .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+        // flatMapGroupsWithState simhash-bucket operator) replayed over a
+        // staged corpus with maxHamming = 0 — exact-signature semantics,
+        // so the DuckDB oracle reproduces the ENTIRE operator bit-for-bit:
+        // simhash16 is a per-token md5-bit vote (TextFunctions.simhash16),
+        // recomputed in SQL from the same md5 hex digits, and dup_of is
+        // the earliest prior doc with the same 16-bit signature (a window
+        // over sig). Duplicates exist by construction (see NearDupCorpus);
+        // signature collisions across different texts are NOT a gate
+        // hazard because the oracle models the signature itself, not text
+        // equality. Six files replayed one per micro-batch: dup state must
+        // SURVIVE the batch boundary — cross-batch pairs like (18, 20)
+        // only resolve through the persisted state store. Scale shape:
+        // state is O(buckets x cap), keyed shuffle only — the streaming
+        // form of q35's batch simhash dedup.
+        verdictRows(graft.QueryUtil.replayToMemory(s,
+          q184Corpus.stage(s, dir))(exactDups))
       },
-      Some("""WITH t AS (
-             |  SELECT doc_id, list_aggregate(list_filter(list_transform(
-             |      list_slice(string_split_regex(trim(lower(text)), '\s+'),
-             |                 1, doc_id % 5 + 6),
-             |      t -> regexp_replace(t, '[^a-z0-9]', '', 'g')),
-             |    x -> x <> ''), 'string_agg', ' ') AS norm
-             |  FROM documents WHERE doc_id < 60
-             |), st AS (
-             |  SELECT a.doc_id,
-             |    CASE WHEN a.doc_id % 3 = 2 AND b.norm IS NOT NULL
-             |         THEN b.norm ELSE a.norm END AS text
-             |  FROM t a LEFT JOIN t b ON b.doc_id = a.doc_id - 2
-             |), tok AS (
-             |  SELECT doc_id,
-             |    unnest(string_split_regex(lower(text), '\s+')) AS tk
-             |  FROM st
-             |), bit AS (
-             |  SELECT doc_id, g.i,
-             |    CASE WHEN sum(CASE WHEN substr(md5(tk), g.i::INT, 1) >= '8'
-             |                       THEN 1 ELSE -1 END) > 0
-             |         THEN '1' ELSE '0' END AS b
-             |  FROM tok, generate_series(1, 16) AS g(i)
-             |  GROUP BY doc_id, g.i
-             |), sg AS (
-             |  SELECT doc_id, string_agg(b, '' ORDER BY i) AS sig
-             |  FROM bit GROUP BY doc_id
-             |), o AS (
-             |  SELECT doc_id, sig,
-             |    min(doc_id) OVER (PARTITION BY sig ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior
-             |  FROM sg
-             |)
-             |SELECT doc_id, sig, prior IS NOT NULL AS is_dup,
-             |  coalesce(prior, -1)::BIGINT AS dup_of
-             |FROM o ORDER BY doc_id""".stripMargin),
+      Some(q184Corpus.oracle()),
     ),
     QueryDef(
       "q185_stream_decontam",
@@ -3563,41 +3486,29 @@ object Extras {
         // map-only gram explosion on the stream, benchmark grams broadcast
         // (eval suites are MBs vs a 100 TB feed), one keyed state shuffle.
         import graft.functions.TextFunctions
-        import org.apache.spark.sql.streaming.Trigger
         val docs = T(s, dir, "documents")
         val benchGrams = docs.where(col("doc_id") % 7 === 0)
           .select(explode(TextFunctions.wordNgrams(
             TextFunctions.tokens(lower(col("text"))), 13)).as("g"))
           .distinct()
-        val stage = graft.QueryUtil.tempDir("q185_in").toString
+        val stage = graft.QueryUtil.tempDir("q185_in")
         docs.where(col("doc_id") % 7 =!= 0).select("doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val qname = "q185_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage).schema).parquet(stage)
+          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        graft.QueryUtil.replayToMemory(s, stage, "complete") { stream =>
           // single staged file → the file source gives the micro-batch ONE
           // input partition, so the 13-gram explosion ran on one task; fan
           // it out exactly like the batch twin q94 does on the same
           // single-row-group corpus (explicit width, not the gate
-          // state-partition override — the explosion is map work, the tiny
-          // agg after it is what the override sizes)
-          val hits = stream
-            .repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+          // state-partition count — the explosion is map work, the tiny
+          // agg after it is what that count sizes)
+          stream
+            .repartition(graft.QueryUtil.Fanout, col("doc_id"))
             .select(col("doc_id"), explode(TextFunctions.wordNgrams(
               TextFunctions.tokens(lower(col("text"))), 13)).as("g"))
             .join(broadcast(benchGrams), "g")
             .groupBy(col("doc_id"))
             .agg(size(collect_set(col("g"))).cast("long").as("n_contaminated"))
-          val ck = graft.QueryUtil.tempDir("q185_ck").toString
-          val sq = hits.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
-        s.table(qname)
-          .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+        }.transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
       },
       Some("""WITH toks AS (
              |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
@@ -3617,10 +3528,9 @@ object Extras {
       (s, dir) => {
         // Watermarked APPEND-mode event-time windows with real late-data
         // drops — the semantics q101's complete-mode gate deliberately
-        // punted on. Controlled replay: four mtime-ordered files, one per
-        // micro-batch; docs carry ts = epoch + 30s * doc_id EXCEPT file
-        // b2 (docs 40-49), which arrives in batch 3 carrying STALE event
-        // times (ts = 30s * (doc_id - 40), inside b0's era). By then the
+        // punted on. Controlled replay (lateDataStage): four files, one
+        // per micro-batch; file b2 (docs 40-49) arrives in batch 3
+        // carrying STALE event times inside b0's era. By then the
         // watermark (60 s delay) has passed those windows' ends, their
         // state is emitted-and-evicted, so every late row must be DROPPED
         // from the appended output. The emission cutoff is Spark's
@@ -3629,36 +3539,11 @@ object Extras {
         // batch to flush): windows with end <= max_event_time - delay
         // emit, the trailing open windows never do. sum_doc pins WHICH
         // docs were counted, not just how many.
-        import org.apache.spark.sql.streaming.Trigger
-        val base = T(s, dir, "documents").filter(col("doc_id") < 60)
-          .withColumn("ts", timestamp_seconds(lit(1000000000L) +
-            when(col("doc_id").between(40, 49),
-              (col("doc_id") - 40) * 30).otherwise(col("doc_id") * 30)))
-          .select(col("doc_id"), col("ts"))
-        // slices (0-20)(20-40)(40-50)(50-60) → one partitionBy staging job
-        val fileIdx = when(col("doc_id") < 20, 0)
-          .when(col("doc_id") < 40, 1)
-          .when(col("doc_id") < 50, 2).otherwise(3)
-        val stage = graft.QueryUtil.stageStreamFiles(base, fileIdx, 4,
-          "q186_in", 1_000_000_000_000L)
-        val qname = "q186_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage.toString).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-          val agg = stream
-            .withWatermark("ts", "60 seconds")
+        graft.QueryUtil.replayToMemory(s, lateDataStage(s, dir)) {
+          _.withWatermark("ts", "60 seconds")
             .groupBy(window(col("ts"), "120 seconds"))
             .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_doc"))
-          val ck = graft.QueryUtil.tempDir("q186_ck").toString
-          val sq = agg.writeStream.format("memory").queryName(qname)
-            .outputMode("append").option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
         }
-        s.table(qname)
           .select(unix_timestamp(col("window.start")).as("w_start"),
             col("n"), col("sum_doc"))
           .transform(graft.QueryUtil.orderedSmall(_, col("w_start")))
@@ -3700,7 +3585,6 @@ object Extras {
         // final watermark (global max event time - 30 min delay) passed
         // its end + 30 min gap — the trailing open sessions never emit.
         import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.streaming.Trigger
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val schema = s.read.parquet(s"$dir/events.parquet").schema
         val tsNorm = schema("ts").dataType match {
@@ -3727,23 +3611,9 @@ object Extras {
         val stage = graft.QueryUtil.stageStreamFiles(
           sliced.withColumn("_k", fileIdx).drop("rn"), col("_k"), 4,
           "q187_in", 1_000_000_000_000L)
-        val qname = "q187_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage.toString).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-          val sessions = graft.streaming.Streaming
-            .sessionizeStream(stream, 30L * 60L * 1000L, "30 minutes")
-          val ck = graft.QueryUtil.tempDir("q187_ck").toString
-          val sq = sessions.toDF().writeStream.format("memory")
-            .queryName(qname).outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
-        s.table(qname)
+        graft.QueryUtil.replayToMemory(s, stage)(stream =>
+          graft.streaming.Streaming
+            .sessionizeStream(stream, 30L * 60L * 1000L, "30 minutes").toDF())
           .select(col("user_id"),
             col("session_start").cast("timestamp_ntz").as("session_start"),
             col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -4056,7 +3926,6 @@ object Extras {
         // (same construction as q190, doc_id < 1200 slice). This is the
         // streaming telemetry form: per-batch distinct-count registers
         // with bounded state (groups x 256 rows).
-        import org.apache.spark.sql.streaming.Trigger
         import graft.operators.Hll
         val base = T(s, dir, "documents")
           .filter(col("doc_id") < 1200)
@@ -4064,24 +3933,11 @@ object Extras {
         val stage = graft.QueryUtil.stageStreamFiles(base,
           (col("doc_id") / 300).cast("int"), 4, "q191_in",
           1_500_000_000_000L)
-        val qname = "q191_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage.toString).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-          val regs = Hll.registers(stream, Seq("lang"), col("doc_id"))
-          val ck = graft.QueryUtil.tempDir("q191_ck").toString
-          val sq = regs.writeStream.format("memory")
-            .queryName(qname).outputMode("complete")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
+        val regs = graft.QueryUtil.replayToMemory(s, stage, "complete")(
+          Hll.registers(_, Seq("lang"), col("doc_id")))
         val exact = base.groupBy("lang")
           .agg(countDistinct("doc_id").cast("long").as("exact_distinct"))
-        Hll.estimate(s.table(qname), Seq("lang"))
+        Hll.estimate(regs, Seq("lang"))
           .join(exact, "lang")
           .select(col("lang"), col("n_hit"), col("sum_rho"),
             col("max_rho"), col("exact_distinct"),
@@ -4578,46 +4434,27 @@ object Extras {
         // per-register emissions are monotone non-decreasing, and the
         // LAST emission per (window, bucket) equals the batch HLL
         // register the oracle recomputes from md5 hex digits over
-        // on-time rows only.
-        import org.apache.spark.sql.streaming.Trigger
+        // on-time rows only. Same late-data replay as q186
+        // (lateDataStage).
         import graft.operators.Hll
-        val base = T(s, dir, "documents").filter(col("doc_id") < 60)
-          .withColumn("ts", timestamp_seconds(lit(1000000000L) +
-            when(col("doc_id").between(40, 49),
-              (col("doc_id") - 40) * 30).otherwise(col("doc_id") * 30)))
-          .select(col("doc_id"), col("ts"))
-        val fileIdx = when(col("doc_id") < 20, 0)
-          .when(col("doc_id") < 40, 1)
-          .when(col("doc_id") < 50, 2).otherwise(3)
-        val stage = graft.QueryUtil.stageStreamFiles(base, fileIdx, 4,
-          "q196_in", 1_100_000_000_000L)
         val emitted =
           scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int)]
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          val stream = s.readStream
-            .schema(s.read.parquet(stage.toString).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-          val (bucket, rho) = Hll.hashCols(col("doc_id"))
-          val regs = stream
-            .withWatermark("ts", "60 seconds")
-            .select(col("ts"), bucket.as("bucket"), rho.as("rho"))
-            .groupBy(window(col("ts"), "120 seconds"), col("bucket"))
-            .agg(max("rho").as("m"))
-            .select(unix_timestamp(col("window.start")).as("w_start"),
-              col("bucket"), col("m"))
-          val ck = graft.QueryUtil.tempDir("q196_ck").toString
-          val sq = regs.writeStream.outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              val rows = b.collect().map(r =>
-                (id, r.getLong(0), r.getInt(1), r.getInt(2)))
-              emitted.synchronized { emitted ++= rows }
-              ()
-            }.start()
-          sq.awaitTermination()
-        }
+        graft.QueryUtil.replayStream(s, lateDataStage(s, dir), "update") {
+          stream =>
+            val (bucket, rho) = Hll.hashCols(col("doc_id"))
+            stream
+              .withWatermark("ts", "60 seconds")
+              .select(col("ts"), bucket.as("bucket"), rho.as("rho"))
+              .groupBy(window(col("ts"), "120 seconds"), col("bucket"))
+              .agg(max("rho").as("m"))
+              .select(unix_timestamp(col("window.start")).as("w_start"),
+                col("bucket"), col("m"))
+        }(_.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val rows = b.collect().map(r =>
+            (id, r.getLong(0), r.getInt(1), r.getInt(2)))
+          emitted.synchronized { emitted ++= rows }
+          ()
+        })
         val all = emitted.toSeq
         val lateDropped =
           !all.exists(e => e._2 <= 1000000200L && e._1 >= 1)
@@ -4678,19 +4515,17 @@ object Extras {
     QueryDef(
       "q197_stream_multipass",
       (s, dir) => {
-        // The 4-permuted-pass near-dup COMPOSITION (previously only
-        // documented at Streaming.nearDupStream) gated end-to-end: four
-        // streaming passes over the same mtime-ordered replay, each
-        // bucketing on a disjoint 4-char signature band (0/4/8/12), each
-        // with its own state store; min-combining their verdicts equals
-        // the full-hamming batch answer by pigeonhole (<= 3 differing
-        // chars over 4 disjoint bands leaves some band identical) — the
-        // oracle recomputes simhash16 from md5 hex digits (q184 idiom)
-        // and takes each doc's EARLIEST prior within hamming 3 via a
-        // quadratic join, so recall is proven, not sampled. The corpus
-        // plants near-dup structure: groups of 4 docs share 24 base
-        // tokens with one position mutated per variant.
-        import org.apache.spark.sql.streaming.Trigger
+        // The pigeonhole-exact near-dup COMPOSITION gated end-to-end: one
+        // stream of `Streaming.nearDupStream` keyed on four disjoint
+        // 4-char signature bands, its per-band verdicts min-combined
+        // (`Streaming.combineBands`); that equals the full-hamming batch
+        // answer by pigeonhole (<= 3 differing chars over 4 disjoint bands
+        // leaves some band identical) — the oracle recomputes simhash16
+        // from md5 hex digits (q184 idiom) and takes each doc's EARLIEST
+        // prior within hamming 3 via a quadratic join, so recall is
+        // proven, not sampled. The corpus plants near-dup structure:
+        // groups of 4 docs share 24 base tokens with one position mutated
+        // per variant.
         val base = T(s, dir, "documents")
           .filter(col("doc_id") < 80)
           .withColumn("grp", (col("doc_id") / 4).cast("long") * 4)
@@ -4712,43 +4547,12 @@ object Extras {
         val stage = graft.QueryUtil.stageStreamFiles(staged,
           (col("doc_id") / 20).cast("int"), 4, "q197_in",
           1_200_000_000_000L)
-        // the four band passes are INDEPENDENT streams (own state store,
-        // own checkpoint) combined only afterwards — run them overlapped
-        // from a thread pool (guide §2.6) instead of serializing four
-        // rounds of fixed micro-batch machinery
-        val streamSchema = s.read.parquet(stage.toString).schema
-        val passes = graft.QueryUtil.withGateStreamPartitions(s) {
-          graft.QueryUtil.inParallel(Seq(0, 4, 8, 12).map { r => () =>
-            val stream = s.readStream
-              .schema(streamSchema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(stage.toString)
-            val verdicts = graft.streaming.Streaming.nearDupStream(
-              stream, "doc_id", "text", maxHamming = 3,
-              bucketFrom = r, bucketLen = 4)
-            val qname = s"q197_mem_${r}_" +
-              java.util.UUID.randomUUID().toString.replace("-", "")
-            val ck = graft.QueryUtil
-              .tempDir(s"q197_ck$r").toString
-            val sq = verdicts.toDF().writeStream.format("memory")
-              .queryName(qname).outputMode("append")
-              .option("checkpointLocation", ck)
-              .trigger(Trigger.AvailableNow()).start()
-            sq.awaitTermination()
-            s.table(qname).select(col("doc_id"), col("simhash"),
-              col("dup_of"))
-          })
-        }
-        passes.reduce(_.union(_))
-          .groupBy("doc_id")
-          .agg(first("simhash").as("sig"),
-            min(when(col("dup_of") =!= -1L, col("dup_of"))).as("hit"))
-          .select(col("doc_id"), col("sig"),
-            col("hit").isNotNull.as("is_dup"),
-            coalesce(col("hit"), lit(-1L)).as("dup_of"))
-          .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+        val verdicts = graft.QueryUtil.replayToMemory(s, stage)(
+          graft.streaming.Streaming.nearDupStream(_, "doc_id", "text",
+            maxHamming = 3, bandLen = 4, bands = 4).toDF())
+        verdictRows(graft.streaming.Streaming.combineBands(verdicts))
       },
-      Some("""WITH t AS (
+      Some(raw"""WITH t AS (
              |  SELECT doc_id AS grp, list_filter(list_transform(
              |      list_slice(string_split_regex(trim(lower(text)), '\s+'),
              |                 1, 24),
@@ -4765,19 +4569,7 @@ object Extras {
              |  FROM documents d
              |  JOIN t ON t.grp = (d.doc_id // 4) * 4
              |  WHERE d.doc_id < 80
-             |), tok AS (
-             |  SELECT doc_id, unnest(toks) AS tk FROM st
-             |), bit AS (
-             |  SELECT doc_id, g.i,
-             |    CASE WHEN sum(CASE WHEN substr(md5(tk), g.i::INT, 1) >= '8'
-             |                       THEN 1 ELSE -1 END) > 0
-             |         THEN '1' ELSE '0' END AS b
-             |  FROM tok, generate_series(1, 16) AS g(i)
-             |  GROUP BY doc_id, g.i
-             |), sg AS (
-             |  SELECT doc_id, string_agg(b, '' ORDER BY i) AS sig
-             |  FROM bit GROUP BY doc_id
-             |), prior AS (
+             |), ${simhashSql("toks")}, prior AS (
              |  -- earliest prior within hamming 3 — the full-hamming
              |  -- batch answer the 4-band composition must equal
              |  SELECT a.doc_id, MIN(b.doc_id) AS hit
@@ -4916,140 +4708,19 @@ object Extras {
         // stores exist for, which q184-q197 never exercise: the q184
         // corpus/operator (exact-signature streaming near-dup, SQL
         // oracle reproduces it bit-for-bit) run as TWO query incarnations
-        // sharing one checkpoint and one transactional parquet sink.
-        // Run 1 consumes files b00-b01 (docs 0-19) and stops; files
-        // b02-b05 then land and run 2 RESUMES from the committed offsets
-        // with the RELOADED state store. The planted pair (18, 20)
-        // crosses the restart: doc 20's verdict can only come from state
-        // recovered off disk. Gates: the combined sink equals an
-        // uninterrupted control run (fresh checkpoint, all six files)
-        // row-for-row, and both equal the batch SQL oracle.
-        import org.apache.spark.sql.streaming.Trigger
-        val base = T(s, dir, "documents")
-          .filter(col("doc_id") < 60)
-          .withColumn("norm", expr(
-            """array_join(filter(transform(
-              |  slice(split(trim(lower(text)), '\\s+'), 1,
-              |        cast(doc_id % 5 + 6 as int)),
-              |  t -> regexp_replace(t, '[^a-z0-9]', '')),
-              |  x -> x != ''), ' ')""".stripMargin))
-          .select(col("doc_id"), col("norm"))
-        val staged = base.alias("a")
-          .join(base.alias("b"), col("b.doc_id") === col("a.doc_id") - 2,
-            "left")
-          .select(col("a.doc_id").as("doc_id"),
-            when(col("a.doc_id") % 3 === 2 && col("b.norm").isNotNull,
-              col("b.norm")).otherwise(col("a.norm")).as("text"))
-        // all six drop files are produced by ONE partitionBy staging job
-        // into a side dir; each incarnation then sees exactly the files
-        // MOVED into the live dir before it starts (mtimes preserved, so
-        // replay order is unchanged)
-        val side = graft.QueryUtil.stageStreamFiles(staged,
-          (col("doc_id") / 10).cast("int"), 6, "q199_side",
-          1_300_000_000_000L)
-        val stage = graft.QueryUtil.tempDir("q199_in")
-        def addFile(k: Int): Unit = {
-          val name = f"b$k%02d.parquet"
-          java.nio.file.Files.move(side.resolve(name), stage.resolve(name))
-        }
-        val schema = staged.schema
-        val ck = graft.QueryUtil.tempDir("q199_ck").toString
-        val outDir =
-          graft.QueryUtil.tempDir("q199_out").toString
-        def runOnce(): Unit = {
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-          val sq = graft.streaming.Streaming
-            .nearDupStream(stream, "doc_id", "text", maxHamming = 0)
-            .toDF().writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
-        val qname = "q199_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.withGateStreamPartitions(s) {
-          (0 until 2).foreach(addFile) // docs 0-19 visible to run 1
-          runOnce() // incarnation 1: commits offsets + state, stops
-          (2 until 6).foreach(addFile) // docs 20-59 land while "down"
-          // incarnation 2 (resumes from the checkpoint) and the
-          // uninterrupted control (fresh checkpoint, all files from go)
-          // are independent streams — overlapped (guide §2.6)
-          graft.QueryUtil.inParallel(Seq(
-            () => runOnce(),
-            () => {
-              val ck2 = graft.QueryUtil.tempDir("q199_ck2")
-                .toString
-              val stream2 = s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-              val sq2 = graft.streaming.Streaming
-                .nearDupStream(stream2, "doc_id", "text", maxHamming = 0)
-                .toDF().writeStream.format("memory").queryName(qname)
-                .outputMode("append").option("checkpointLocation", ck2)
-                .trigger(Trigger.AvailableNow()).start()
-              sq2.awaitTermination()
-            }))
-        }
-        val restarted = s.read.parquet(outDir)
-          .select(col("doc_id"), col("simhash"), col("dup_of"))
-        val control = s.table(qname)
-          .select(col("doc_id"), col("simhash"), col("dup_of"))
-        // multiset equality on the driver: these sinks are gate-sized
-        // (60 rows), and the old count + two exceptAll actions were three
-        // shuffle jobs where two tiny collects do (guide §2.4; exceptAll
-        // IS multiset difference, so grouped-count equality is identical)
-        def multiset(rows: Array[org.apache.spark.sql.Row]) =
-          rows.groupBy(identity).view.mapValues(_.length).toMap
-        val restRows = restarted.collect()
-        val equal = restRows.length == 60 &&
-          multiset(restRows) == multiset(control.collect())
-        restarted
-          .select(col("doc_id"), col("simhash").as("sig"),
-            (col("dup_of") =!= -1L).as("is_dup"), col("dup_of"))
-          .withColumn("restart_ok", lit(equal))
-          .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+        // sharing one checkpoint and one transactional parquet sink
+        // (QueryUtil.restartParity). Run 1 consumes files b00-b01 (docs
+        // 0-19) and stops; files b02-b05 then land and run 2 RESUMES from
+        // the committed offsets with the RELOADED state store. The planted
+        // pair (18, 20) crosses the restart: doc 20's verdict can only
+        // come from state recovered off disk. Gates: the combined sink
+        // equals an uninterrupted control run (fresh checkpoint, all six
+        // files) row-for-row, and both equal the batch SQL oracle.
+        val (restarted, ok) = graft.QueryUtil.restartParity(s, s,
+          q184Corpus.stage(s, dir), q184Corpus.rows)(exactDups)
+        verdictRows(restarted, lit(ok).as("restart_ok"))
       },
-      Some("""WITH t AS (
-             |  SELECT doc_id, list_aggregate(list_filter(list_transform(
-             |      list_slice(string_split_regex(trim(lower(text)), '\s+'),
-             |                 1, doc_id % 5 + 6),
-             |      t -> regexp_replace(t, '[^a-z0-9]', '', 'g')),
-             |    x -> x <> ''), 'string_agg', ' ') AS norm
-             |  FROM documents WHERE doc_id < 60
-             |), st AS (
-             |  SELECT a.doc_id,
-             |    CASE WHEN a.doc_id % 3 = 2 AND b.norm IS NOT NULL
-             |         THEN b.norm ELSE a.norm END AS text
-             |  FROM t a LEFT JOIN t b ON b.doc_id = a.doc_id - 2
-             |), tok AS (
-             |  SELECT doc_id,
-             |    unnest(string_split_regex(lower(text), '\s+')) AS tk
-             |  FROM st
-             |), bit AS (
-             |  SELECT doc_id, g.i,
-             |    CASE WHEN sum(CASE WHEN substr(md5(tk), g.i::INT, 1) >= '8'
-             |                       THEN 1 ELSE -1 END) > 0
-             |         THEN '1' ELSE '0' END AS b
-             |  FROM tok, generate_series(1, 16) AS g(i)
-             |  GROUP BY doc_id, g.i
-             |), sg AS (
-             |  SELECT doc_id, string_agg(b, '' ORDER BY i) AS sig
-             |  FROM bit GROUP BY doc_id
-             |), o AS (
-             |  SELECT doc_id, sig,
-             |    min(doc_id) OVER (PARTITION BY sig ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |      AS prior
-             |  FROM sg
-             |)
-             |SELECT doc_id, sig, prior IS NOT NULL AS is_dup,
-             |  coalesce(prior, -1)::BIGINT AS dup_of,
-             |  -- computed Spark-side from the two runs' sinks;
-             |  -- hash-match forces it TRUE
-             |  TRUE AS restart_ok
-             |FROM o ORDER BY doc_id""".stripMargin),
+      Some(q184Corpus.oracle("restart_ok")),
     ),
     QueryDef(
       "q200_jpx",
@@ -5336,41 +5007,11 @@ object Extras {
         // off the changelog — then an HDFS-provider control run from
         // scratch must match row-for-row (backend parity), and both
         // must equal the batch SQL oracle.
-        import org.apache.spark.sql.streaming.Trigger
-        val base = T(s, dir, "documents")
-          .filter(col("doc_id") < 50)
-          .withColumn("norm", expr(
-            """array_join(filter(transform(
-              |  slice(split(trim(lower(text)), '\\s+'), 1,
-              |        cast(doc_id % 4 + 5 as int)),
-              |  t -> regexp_replace(t, '[^a-z0-9]', '')),
-              |  x -> x != ''), ' ')""".stripMargin))
-          .select(col("doc_id"), col("norm"))
-        val staged = base.alias("a")
-          .join(base.alias("b"), col("b.doc_id") === col("a.doc_id") - 3,
-            "left")
-          .select(col("a.doc_id").as("doc_id"),
-            when(col("a.doc_id") % 4 === 1 && col("b.norm").isNotNull,
-              col("b.norm")).otherwise(col("a.norm")).as("text"))
-        // all five drop files from ONE partitionBy staging job into a side
-        // dir, moved into the live dir per incarnation (mtimes preserved)
-        val side = graft.QueryUtil.stageStreamFiles(staged,
-          (col("doc_id") / 10).cast("int"), 5, "q203_side",
-          1_400_000_000_000L)
-        val stage = graft.QueryUtil.tempDir("q203_in")
-        def addFile(k: Int): Unit = {
-          val name = f"b$k%02d.parquet"
-          java.nio.file.Files.move(side.resolve(name), stage.resolve(name))
-        }
-        val schema = staged.schema
-        val ck = graft.QueryUtil.tempDir("q203_ck").toString
-        val outDir =
-          graft.QueryUtil.tempDir("q203_out").toString
-        // the RocksDB incarnations run on a CHILD session carrying the
-        // provider + changelog + gate state-partition confs — session
-        // confs are session-scoped, so the shared session is never
-        // mutated and the HDFS-provider control can run CONCURRENTLY
-        // with incarnation 2 (they are independent streams)
+        //
+        // The RocksDB incarnations run on a CHILD session carrying the
+        // provider + changelog confs — session confs are session-scoped,
+        // so the shared session is never mutated and the HDFS-provider
+        // control can run CONCURRENTLY with incarnation 2.
         // newSession() inherits only BUILDER-level confs; runtime overrides
         // set on `s` after session creation would silently diverge between
         // the RocksDB incarnations (s2) and the HDFS control (s) — copy
@@ -5385,98 +5026,11 @@ object Extras {
             "streaming.state.RocksDBStateStoreProvider")
         s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled", "true")
-        s2.conf.set("spark.sql.shuffle.partitions",
-          s.conf.getOption("graft.gate.streamPartitions").getOrElse("4"))
-        def runOnce(): Unit = {
-          val stream = s2.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-          val sq = graft.streaming.Streaming
-            .nearDupStream(stream, "doc_id", "text", maxHamming = 0)
-            .toDF().writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow()).start()
-          sq.awaitTermination()
-        }
-        (0 until 2).foreach(addFile) // docs 0-19 visible to run 1
-        runOnce() // incarnation 1 under RocksDB, stops
-        (2 until 5).foreach(addFile) // docs 20-49 land while "down"
-        // control: DEFAULT (HDFS-backed) provider, fresh checkpoint,
-        // all files from go — backend parity, not just recovery;
-        // independent of incarnation 2, so the two run overlapped
-        val qname = "q203_mem_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        graft.QueryUtil.inParallel(Seq(
-          () => runOnce(), // incarnation 2: recovers RocksDB off the changelog
-          () => graft.QueryUtil.withGateStreamPartitions(s) {
-            val ck2 = graft.QueryUtil.tempDir("q203_ck2")
-              .toString
-            val stream2 = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-            val sq2 = graft.streaming.Streaming
-              .nearDupStream(stream2, "doc_id", "text", maxHamming = 0)
-              .toDF().writeStream.format("memory").queryName(qname)
-              .outputMode("append").option("checkpointLocation", ck2)
-              .trigger(Trigger.AvailableNow()).start()
-            sq2.awaitTermination()
-          }))
-        val restarted = s.read.parquet(outDir)
-          .select(col("doc_id"), col("simhash"), col("dup_of"))
-        val control = s.table(qname)
-          .select(col("doc_id"), col("simhash"), col("dup_of"))
-        // multiset equality on the driver (see q199): two tiny collects
-        // replace count + two exceptAll shuffle jobs on a 50-row sink
-        def multiset(rows: Array[org.apache.spark.sql.Row]) =
-          rows.groupBy(identity).view.mapValues(_.length).toMap
-        val restRows = restarted.collect()
-        val equal = restRows.length == 50 &&
-          multiset(restRows) == multiset(control.collect())
-        restarted
-          .select(col("doc_id"), col("simhash").as("sig"),
-            (col("dup_of") =!= -1L).as("is_dup"), col("dup_of"))
-          .withColumn("rocksdb_ok", lit(equal))
-          .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+        val (restarted, ok) = graft.QueryUtil.restartParity(s, s2,
+          q203Corpus.stage(s, dir), q203Corpus.rows)(exactDups)
+        verdictRows(restarted, lit(ok).as("rocksdb_ok"))
       },
-      Some("""WITH t AS (
-             |  SELECT doc_id, list_aggregate(list_filter(list_transform(
-             |      list_slice(string_split_regex(trim(lower(text)), '\s+'),
-             |                 1, doc_id % 4 + 5),
-             |      t -> regexp_replace(t, '[^a-z0-9]', '', 'g')),
-             |    x -> x <> ''), 'string_agg', ' ') AS norm
-             |  FROM documents WHERE doc_id < 50
-             |), st AS (
-             |  SELECT a.doc_id,
-             |    CASE WHEN a.doc_id % 4 = 1 AND b.norm IS NOT NULL
-             |         THEN b.norm ELSE a.norm END AS text
-             |  FROM t a LEFT JOIN t b ON b.doc_id = a.doc_id - 3
-             |), tok AS (
-             |  SELECT doc_id,
-             |    unnest(string_split_regex(lower(text), '\s+')) AS tk
-             |  FROM st
-             |), bit AS (
-             |  SELECT doc_id, g.i,
-             |    CASE WHEN sum(CASE WHEN substr(md5(tk), g.i::INT, 1) >= '8'
-             |                       THEN 1 ELSE -1 END) > 0
-             |         THEN '1' ELSE '0' END AS b
-             |  FROM tok, generate_series(1, 16) AS g(i)
-             |  GROUP BY doc_id, g.i
-             |), sg AS (
-             |  SELECT doc_id, string_agg(b, '' ORDER BY i) AS sig
-             |  FROM bit GROUP BY doc_id
-             |), o AS (
-             |  SELECT doc_id, sig,
-             |    min(doc_id) OVER (PARTITION BY sig ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |      AS prior
-             |  FROM sg
-             |)
-             |SELECT doc_id, sig, prior IS NOT NULL AS is_dup,
-             |  coalesce(prior, -1)::BIGINT AS dup_of,
-             |  -- computed Spark-side from the two runs' sinks;
-             |  -- hash-match forces it TRUE
-             |  TRUE AS rocksdb_ok
-             |FROM o ORDER BY doc_id""".stripMargin),
+      Some(q203Corpus.oracle("rocksdb_ok")),
     ),
     QueryDef(
       "q204_jpx_tiled",
@@ -5769,6 +5323,124 @@ object Extras {
              |ORDER BY d.doc_id""".stripMargin),
     ),
   )
+
+  /** The planted near-dup corpus of q184, q199 and q203: documents
+    * `doc_id < rows`, each cut to its first `doc_id % sliceMod + sliceAdd`
+    * normalized tokens; a doc with `doc_id % dupMod = dupRem` carries the
+    * text of doc `doc_id - lag` instead, when that doc exists.
+    */
+  private final case class NearDupCorpus(rows: Int, sliceMod: Int,
+      sliceAdd: Int, lag: Int, dupMod: Int, dupRem: Int) {
+
+    /** The corpus as one mtime-ordered parquet file per 10 doc_ids. */
+    def stage(s: org.apache.spark.sql.SparkSession,
+        dir: String): java.nio.file.Path = {
+      val base = T(s, dir, "documents")
+        .filter(col("doc_id") < rows)
+        .withColumn("norm", expr(
+          raw"""array_join(filter(transform(
+            |  slice(split(trim(lower(text)), '\\s+'), 1,
+            |        cast(doc_id % $sliceMod + $sliceAdd as int)),
+            |  t -> regexp_replace(t, '[^a-z0-9]', '')),
+            |  x -> x != ''), ' ')""".stripMargin))
+        .select(col("doc_id"), col("norm"))
+      val staged = base.alias("a")
+        .join(base.alias("b"), col("b.doc_id") === col("a.doc_id") - lag,
+          "left")
+        .select(col("a.doc_id").as("doc_id"),
+          when(col("a.doc_id") % dupMod === dupRem && col("b.norm").isNotNull,
+            col("b.norm")).otherwise(col("a.norm")).as("text"))
+      graft.QueryUtil.stageStreamFiles(staged,
+        (col("doc_id") / 10).cast("int"), rows / 10, "neardup_in",
+        1_000_000_000_000L)
+    }
+
+    /** The exact-signature (maxHamming = 0) verdicts in DuckDB; `flag`
+      * names a boolean the gate computes Spark-side, pinned TRUE here.
+      */
+    def oracle(flag: String = ""): String = {
+      val flagCol =
+        if (flag.isEmpty) ""
+        else s",\n  -- computed Spark-side; hash-match forces it TRUE\n  TRUE AS $flag"
+      raw"""WITH t AS (
+        |  SELECT doc_id, list_aggregate(list_filter(list_transform(
+        |      list_slice(string_split_regex(trim(lower(text)), '\s+'),
+        |                 1, doc_id % $sliceMod + $sliceAdd),
+        |      t -> regexp_replace(t, '[^a-z0-9]', '', 'g')),
+        |    x -> x <> ''), 'string_agg', ' ') AS norm
+        |  FROM documents WHERE doc_id < $rows
+        |), st AS (
+        |  SELECT a.doc_id,
+        |    CASE WHEN a.doc_id % $dupMod = $dupRem AND b.norm IS NOT NULL
+        |         THEN b.norm ELSE a.norm END AS text
+        |  FROM t a LEFT JOIN t b ON b.doc_id = a.doc_id - $lag
+        |), ${simhashSql("string_split_regex(lower(text), '\\s+')")}, o AS (
+        |  SELECT doc_id, sig,
+        |    min(doc_id) OVER (PARTITION BY sig ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior
+        |  FROM sg
+        |)
+        |SELECT doc_id, sig, prior IS NOT NULL AS is_dup,
+        |  coalesce(prior, -1)::BIGINT AS dup_of$flagCol
+        |FROM o ORDER BY doc_id""".stripMargin
+    }
+  }
+
+  private lazy val q184Corpus = NearDupCorpus(rows = 60, sliceMod = 5,
+    sliceAdd = 6, lag = 2, dupMod = 3, dupRem = 2)
+  private lazy val q203Corpus = NearDupCorpus(rows = 50, sliceMod = 4,
+    sliceAdd = 5, lag = 3, dupMod = 4, dupRem = 1)
+
+  /** DuckDB CTEs `tok`, `bit` and `sg` after a CTE `st`: each doc's
+    * simhash16 signature from the md5 hex digits of the tokens `tokens`
+    * yields, exactly as TextFunctions.simhash16 votes.
+    */
+  private def simhashSql(tokens: String): String =
+    s"""tok AS (
+      |  SELECT doc_id, unnest($tokens) AS tk FROM st
+      |), bit AS (
+      |  SELECT doc_id, g.i,
+      |    CASE WHEN sum(CASE WHEN substr(md5(tk), g.i::INT, 1) >= '8'
+      |                       THEN 1 ELSE -1 END) > 0
+      |         THEN '1' ELSE '0' END AS b
+      |  FROM tok, generate_series(1, 16) AS g(i)
+      |  GROUP BY doc_id, g.i
+      |), sg AS (
+      |  SELECT doc_id, string_agg(b, '' ORDER BY i) AS sig
+      |  FROM bit GROUP BY doc_id
+      |)""".stripMargin
+
+  /** The exact-signature near-dup stream of q184, q199 and q203. */
+  private def exactDups(stream: org.apache.spark.sql.DataFrame) =
+    graft.streaming.Streaming
+      .nearDupStream(stream, "doc_id", "text", maxHamming = 0).toDF()
+
+  /** Near-dup gate output: doc_id, sig, is_dup, dup_of, then `flags`. */
+  private def verdictRows(verdicts: org.apache.spark.sql.DataFrame,
+      flags: org.apache.spark.sql.Column*) =
+    verdicts
+      .select(Seq(col("doc_id"), col("simhash").as("sig"),
+        (col("dup_of") =!= -1L).as("is_dup"), col("dup_of")) ++ flags: _*)
+      .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
+
+  /** q186/q196's late-data replay: docs 0-59 at event time 1e9 s +
+    * 30 s × doc_id, staged as four files (docs 0-19, 20-39, 40-49, 50-59),
+    * except that file 2's docs 40-49 carry STALE times 30 s × (doc_id − 40)
+    * from file 0's era.
+    */
+  private def lateDataStage(s: org.apache.spark.sql.SparkSession,
+      dir: String): java.nio.file.Path = {
+    val base = T(s, dir, "documents").filter(col("doc_id") < 60)
+      .withColumn("ts", timestamp_seconds(lit(1000000000L) +
+        when(col("doc_id").between(40, 49),
+          (col("doc_id") - 40) * 30).otherwise(col("doc_id") * 30)))
+      .select(col("doc_id"), col("ts"))
+    val fileIdx = when(col("doc_id") < 20, 0)
+      .when(col("doc_id") < 40, 1)
+      .when(col("doc_id") < 50, 2).otherwise(3)
+    graft.QueryUtil.stageStreamFiles(base, fileIdx, 4, "late_in",
+      1_000_000_000_000L)
+  }
 
   private def try_cast_long(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.try_cast("long")

@@ -32,7 +32,7 @@ object Ml {
         val modelDir = graft.ml.LocalModels.ensureTinyModel(seed = 42L)
         val docs = T(s, dir, "documents")
           .select(col("doc_id"), substring(col("text"), 1, 120).as("snippet"))
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+          .repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val emb = graft.ml.LocalModels.sentenceTransformer(
           docs, "snippet", "emb", modelDir, maxLen = 48)
         // the probe goes through the same checkpoint on the driver; both

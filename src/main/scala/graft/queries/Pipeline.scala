@@ -174,7 +174,7 @@ object Pipeline {
         val sh = shingles(col("text"))
         T(s, dir, "documents")
           .filter(col("n_chars") >= 3)
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id")) // one-row-group file: fan out
+          .repartition(graft.QueryUtil.Fanout, col("doc_id")) // one-row-group file: fan out
           .withColumn("sig",
             graft.plans.TextNative.minhashSignature(s, sh))
           .select((col("doc_id") +:
@@ -200,7 +200,7 @@ object Pipeline {
         val sh = shingles(col("text"))
         val sig = T(s, dir, "documents")
           .filter(col("n_chars") >= 3 && col("doc_id") < 1000)
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id")) // one-row-group file: fan out
+          .repartition(graft.QueryUtil.Fanout, col("doc_id")) // one-row-group file: fan out
           .withColumn("_sig", graft.plans.TextNative.minhashSignature(s, sh))
           .select(col("doc_id") +: (0 until 8).map(j =>
             element_at(col("_sig"), j + 1).as(s"h$j")): _*)
@@ -291,7 +291,7 @@ object Pipeline {
         // bit, 16 interpreted array passes (ScaleCheck measured it 16.6x
         // at 10x before the kernel).
         T(s, dir, "documents")
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id")) // one-row-group file: fan out
+          .repartition(graft.QueryUtil.Fanout, col("doc_id")) // one-row-group file: fan out
           .select(col("doc_id"), graft.plans.TextNative.simhash16(s,
             tokens(col("text"))).as("simhash"))
           .transform(graft.QueryUtil.orderedSmall(_, col("doc_id")))
@@ -849,7 +849,7 @@ object Pipeline {
           // one-row-group corpus file: fan the heavy train-side gram
           // explosion out across cores (q32/q35 discipline; at 100 TB
           // inputs arrive pre-split and this shuffle disappears)
-          docs.where(col("doc_id") % 7 =!= 0).repartition(graft.QueryUtil.fanout(s), col("doc_id")),
+          docs.where(col("doc_id") % 7 =!= 0).repartition(graft.QueryUtil.Fanout, col("doc_id")),
           docs.where(col("doc_id") % 7 === 0),
           "text", "doc_id", n = 13)
           .orderBy(col("doc_id"))
@@ -883,7 +883,7 @@ object Pipeline {
         import graft.operators.{Bloom, Dedup}
         val docs = T(s, dir, "documents")
         val train = docs.where(col("doc_id") % 7 =!= 0)
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+          .repartition(graft.QueryUtil.Fanout, col("doc_id"))
         val bench = docs.where(col("doc_id") % 7 === 0)
         val exact = Dedup.decontaminate(train, bench, "text", "doc_id")
           .withColumnRenamed("doc_id", "eid")
@@ -1218,7 +1218,7 @@ object Pipeline {
         import graft.functions.TextFunctions
         val toksC = TextFunctions.tokens(lower(col("text")))
         val base = T(s, dir, "documents").where(col("doc_id") % 7 =!= 0)
-          .repartition(graft.QueryUtil.fanout(s), col("doc_id"))
+          .repartition(graft.QueryUtil.Fanout, col("doc_id"))
           .select(col("doc_id"), col("text"), toksC.as("_tk"))
         val quality = base.select(col("doc_id"), col("text"), col("_tk"),
             size(col("_tk")).cast("long").as("n_words"),

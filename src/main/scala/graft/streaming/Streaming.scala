@@ -76,9 +76,9 @@ object Streaming {
     * can't express (`session_window` exists, but not with per-event custom
     * merge/emit logic — this operator is the template for any such state).
     *
-    * Input columns: user_id (long), ts (timestamp), pre-sorted within a
-    * group per micro-batch by Spark? NO — Spark gives batch order, so the
-    * handler sorts each group's batch slice by event time before folding.
+    * Input columns: user_id (long), ts (timestamp). A group's rows arrive
+    * in micro-batch order, not event-time order, so the handler sorts each
+    * group's batch slice by event time before folding.
     */
   def sessionizeStream(events: DataFrame, gapMs: Long,
       watermark: String): Dataset[Session] = {
@@ -128,36 +128,41 @@ object Streaming {
       }
   }
 
-  /** One near-dup verdict: `dup_of` is the id of the FIRST seen document
-    * within `maxHamming` SimHash bits, or −1 when the document is novel.
+  /** One near-dup verdict of one signature band: `dup_of` is the id of the
+    * FIRST seen document sharing that band and within `maxHamming` SimHash
+    * bits, or −1 when there is none.
     */
-  final case class NearDupVerdict(doc_id: Long, simhash: String, dup_of: Long)
+  final case class NearDupVerdict(doc_id: Long, simhash: String, dup_of: Long,
+      band: Int)
 
   /** Streaming near-duplicate detection — the crawl-ingest shape: incoming
-    * documents are SimHashed declaratively, then checked against per-bucket
-    * state (`flatMapGroupsWithState`, bucket = the signature's 8-bit
-    * prefix) holding the signatures seen so far. A document within
-    * `maxHamming` bits of ANY prior same-bucket signature reports that
-    * first document in `dup_of`; every signature enters state regardless
-    * (transitive chains keep pointing at the earliest seen copy's bucket
-    * entry). Per-batch processing order is doc_id (deterministic); state
-    * per bucket is FIFO-capped at `maxPerBucket` signatures.
+    * documents are SimHashed declaratively, then checked against keyed
+    * state (`flatMapGroupsWithState`) holding the signatures seen so far.
+    * The 16-char signature is cut into `bands` disjoint bands of `bandLen`
+    * chars; each document enters one state key per band, (band index,
+    * band value). A document within `maxHamming` bits of ANY prior
+    * signature under a key reports that key's first such document in
+    * `dup_of`; every signature enters state regardless (transitive chains
+    * keep pointing at the earliest seen copy). Per-batch processing order
+    * is doc_id (deterministic); state per key is FIFO-capped at
+    * `maxPerBucket` signatures. The stream emits one verdict per document
+    * and band; [[combineBands]] min-combines them.
     *
-    * Scale/fidelity contract: state is O(buckets × maxPerBucket), keyed
-    * shuffle only. Bucketing is the single-pass approximation — a pair
-    * whose differing bits fall inside the bucket band lands in different
-    * buckets and is missed. The pigeonhole-exact composition runs FOUR
-    * passes of this operator with disjoint 4-char bands (`bucketFrom` =
-    * 0/4/8/12, `bucketLen` = 4): any pair within 3 signature chars has
-    * an identical band, so min-combining the passes' verdicts equals the
-    * batch banded-LSH answer exactly — gated end-to-end by q197 against
-    * a full-hamming SQL oracle. Multiple stateful operators can't stack
-    * in one append-mode query, so the passes run as separate streams
-    * over the same source and combine in batch.
+    * Scale/fidelity contract: state is O(keys × maxPerBucket), keyed
+    * shuffle only. The default, one 8-char band (the signature prefix),
+    * is the single-pass approximation: a pair whose differing bits fall
+    * inside the band lands under different keys and is missed. Four
+    * 4-char bands are pigeonhole-exact for `maxHamming` ≤ 3: any pair
+    * within 3 signature chars has an identical band, so the min-combined
+    * verdict is the batch banded-LSH answer, the earliest prior within
+    * the bound — gated end-to-end by q197 against a full-hamming SQL
+    * oracle.
     */
   def nearDupStream(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, maxPerBucket: Int = 10000,
-      bucketFrom: Int = 0, bucketLen: Int = 8): Dataset[NearDupVerdict] = {
+      bandLen: Int = 8, bands: Int = 1): Dataset[NearDupVerdict] = {
+    require(bandLen >= 1 && bands >= 1 && bandLen * bands <= 16,
+      s"nearDupStream: $bands bands of $bandLen chars do not fit a 16-char signature")
     val spark = docs.sparkSession
     import spark.implicits._
     def hamming(a: String, b: String): Int =
@@ -167,21 +172,35 @@ object Streaming {
           split(lower(col(textCol)), "\\s+")).as("sig"))
       .as[(Long, String)]
     withSig
-      .groupByKey(_._2.substring(bucketFrom, bucketFrom + bucketLen))
+      .flatMap { case (id, sig) =>
+        (0 until bands).map(b =>
+          (b, sig.substring(b * bandLen, (b + 1) * bandLen), id, sig))
+      }
+      .groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState[List[(String, Long)], NearDupVerdict](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(Long, String)],
+        (key: (Int, String), rows: Iterator[(Int, String, Long, String)],
          state: GroupState[List[(String, Long)]]) =>
           var seen = state.getOption.getOrElse(Nil) // newest-first FIFO
-          val out = rows.toSeq.sortBy(_._1).map { case (id, sig) =>
+          val out = rows.toSeq.sortBy(_._3).map { case (_, _, id, sig) =>
             // earliest matching doc = LAST match in the newest-first list
             val hit = seen.reverseIterator
               .find { case (s, _) => hamming(s, sig) <= maxHamming }
             seen = (sig, id) :: seen
-            NearDupVerdict(id, sig, hit.map(_._2).getOrElse(-1L))
+            NearDupVerdict(id, sig, hit.map(_._2).getOrElse(-1L), key._1)
           }
           state.update(seen.take(maxPerBucket))
           out.iterator
       }
   }
+
+  /** Batch min-combine of [[nearDupStream]]'s per-band verdicts: one row
+    * per document (doc_id, simhash, dup_of), `dup_of` the smallest id any
+    * band reported, or −1.
+    */
+  def combineBands(verdicts: DataFrame): DataFrame =
+    verdicts.groupBy("doc_id")
+      .agg(first("simhash").as("simhash"),
+        coalesce(min(when(col("dup_of") =!= -1L, col("dup_of"))), lit(-1L))
+          .as("dup_of"))
 }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * graft.Bench, but scoped to named queries — for bisecting one query's
   * regression without a 10-minute full-suite run. Each line also shows the
   * janino compiles and compile time of the timed reps (Spark's
-  * `CodegenMetrics`), so a query's codegen share shows without a debug log.
+  * `CodegenMetrics`), so a query's codegen share shows without a debug log,
+  * and the Spark jobs of each timed rep (`jobs=`), which unlike wall clock
+  * do not vary from host to host.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -17,6 +19,14 @@ object TimeQuery {
     val names = args.drop(2).toSeq
     val spark = graft.Sessions.local()
     val qs = graft.SparkEntry.queries
+    // Spark numbers jobs in submission order, so the id gap between two
+    // one-task marker jobs counts the jobs a timed rep ran in between
+    // (streaming micro-batches and other threads' jobs included)
+    def markerJob(): Int = {
+      val f = spark.sparkContext.parallelize(Seq(0), 1).countAsync()
+      f.get()
+      f.jobIds.head
+    }
     names.foreach { n =>
       val fn = qs(n)
       def run(): Double = {
@@ -27,11 +37,18 @@ object TimeQuery {
       run() // warmup
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
-      val times = (0 until reps).map(_ => run())
+      var mark = markerJob()
+      val (times, jobs) = (0 until reps).map { _ =>
+        val t = run()
+        val next = markerJob()
+        val jobs = next - mark - 1
+        mark = next
+        (t, jobs)
+      }.unzip
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       println(f"[time] $n min=${times.min}%.3f all=${times.map(t => f"$t%.3f").mkString(",")}" +
-        f" compiles=$compiles compile_ms=$compileMs%.0f")
+        f" compiles=$compiles compile_ms=$compileMs%.0f jobs=${jobs.mkString(",")}")
     }
     spark.stop()
   }

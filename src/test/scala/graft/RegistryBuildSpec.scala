@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * "Build" means invoking the query fn and forcing analysis via `.schema`;
   * it does NOT execute the plan (no collect/noop-write), so the whole
   * 120-query sweep stays cheap. A handful of fns are eager by design (DML
-  * round-trips, the streaming gate, sampling offset tables) — they run
+  * round-trips, the streaming gates, sampling offset tables) — they run
   * their small sf0.001 work, which is exactly the coverage we want here.
   */
 class RegistryBuildSpec extends AnyFunSuite {
@@ -34,5 +34,9 @@ class RegistryBuildSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty, failures.map { case (n, m) => s"\n  $n -> $m" }.mkString)
+    // every gate that starts a stream runs it to termination before it
+    // returns: no stream outlives the query that started it
+    assert(spark.streams.active.isEmpty,
+      spark.streams.active.map(_.name).mkString("streams still active: ", ", ", ""))
   }
 }

@@ -114,6 +114,71 @@ class StreamingSpec extends AnyFunSuite {
     assert(got(2L)._2 == -1L && got(5L)._2 == -1L)
   }
 
+  test("streaming near-dup: four bands on one stream replay the per-band folds and min-combine to the earliest prior") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-bands").toString
+    val base = "the quick brown fox jumps over the lazy dog near the old river bank"
+    val words = base.split(" ")
+    def variant(i: Int, w: String) = words.updated(i, w).mkString(" ")
+    val batch1 = Seq(
+      (1L, base),
+      (2L, "completely different content about spark shuffles and joins"),
+      (3L, variant(2, "red")),
+      (4L, variant(8, "cat")),
+      (5L, variant(12, "lake")),
+    ).toDF("doc_id", "text")
+    val batch2 = Seq(
+      (6L, base), // exact dup of 1
+      (7L, variant(5, "under")),
+      (8L, variant(10, "new")),
+      (9L, "completely different content about spark shuffles and sorts"),
+      (10L, "yet another unrelated piece of text entirely here"),
+    ).toDF("doc_id", "text")
+    batch1.write.mode("overwrite").parquet(dir)
+    val stream = Streaming.fileStream(spark, dir, batch1.schema)
+    val out = Streaming.nearDupStream(stream, "doc_id", "text", maxHamming = 3,
+      bandLen = 4, bands = 4)
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("neardup_bands_out").start()
+    q.processAllAvailable()
+    batch2.write.mode("append").parquet(dir)
+    q.processAllAvailable(); q.stop()
+    val verdicts = spark.table("neardup_bands_out")
+    val got = verdicts.as[Streaming.NearDupVerdict].collect()
+      .map(v => (v.doc_id, v.band) -> ((v.simhash, v.dup_of))).toMap
+
+    // driver-side replay of the four per-band folds, state keyed on
+    // (band, band value), over the same signatures in arrival order
+    val sigs = batch1.unionByName(batch2)
+      .select(col("doc_id"), graft.functions.TextFunctions.simhash16(
+        split(lower(col("text")), "\\s+")).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def ham(a: String, b: String) = a.zip(b).count { case (x, y) => x != y }
+    val state = scala.collection.mutable.Map.empty[(Int, String), List[(String, Long)]]
+    val expected = Seq((1L to 5L), (6L to 10L)).flatMap { batch =>
+      batch.flatMap { id =>
+        val sig = sigs(id)
+        (0 until 4).map { b =>
+          val key = (b, sig.substring(4 * b, 4 * b + 4))
+          val seen = state.getOrElse(key, Nil)
+          val hit = seen.reverse.find { case (s, _) => ham(s, sig) <= 3 }
+          state(key) = (sig, id) :: seen
+          (id, b) -> ((sig, hit.map(_._2).getOrElse(-1L)))
+        }
+      }
+    }.toMap
+    assert(got == expected)
+
+    // the min-combine is the earliest prior within 3 signature chars
+    val combined = Streaming.combineBands(verdicts)
+      .select("doc_id", "dup_of").as[(Long, Long)].collect().toMap
+    val earliest = sigs.keys.map { id =>
+      id -> sigs.keys.filter(p => p < id && ham(sigs(p), sigs(id)) <= 3)
+        .minOption.getOrElse(-1L)
+    }.toMap
+    assert(combined == earliest)
+    assert(combined(6L) == 1L && combined(10L) == -1L)
+  }
+
   test("stream lands in a versioned table via foreachBatch") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream2").toString
     val cp = java.nio.file.Files.createTempDirectory("graft-cp").toString
