@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.types.StructType
+
+import graft.io.ParquetFooters
 
 /** One operator-inventory query: a Spark implementation plus (optionally) a
   * DuckDB-oracle SQL producing identical rows/columns on the same parquet
@@ -179,32 +179,13 @@ object QueryUtil {
       query: DataFrame => DataFrame)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
     withGateStreamPartitions(s) {
-      val in = s.readStream.schema(stagedSchema(s, stage))
+      val in = s.readStream.schema(ParquetFooters.schemaAt(s, stage.toString))
         .option("maxFilesPerTrigger", "1").parquet(stage.toString)
       sink(query(in).writeStream.outputMode(outputMode)
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow()))
         .start().awaitTermination()
     }
-
-  /** The schema Spark wrote into the footer of the first parquet file in
-    * `stage`, read on the driver: `spark.read.parquet(dir).schema` infers
-    * the same schema but runs a Spark job to do it. Nullable throughout,
-    * like a file-source read.
-    */
-  private def stagedSchema(s: SparkSession,
-      stage: java.nio.file.Path): StructType = {
-    val file = new java.io.File(stage.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toURI), s.sparkContext.hadoopConfiguration))
-    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata")
-    finally reader.close()
-    require(json != null, s"stagedSchema: $file was not written by Spark")
-    StructType(DataType.fromJson(json).asInstanceOf[StructType]
-      .map(_.copy(nullable = true)))
-  }
 
   /** [[replayStream]] into a uniquely named memory sink; returns its table. */
   def replayToMemory(s: SparkSession, stage: java.nio.file.Path,
@@ -295,8 +276,12 @@ object Tables {
     // (TESTDATA.md "events schema contract"): TIMESTAMP(NANOS) — which
     // Spark's parquet reader rejects unless read as long — or plain
     // timestamp[us]. Branch on the physical schema rather than assuming.
+    // The schema comes from the file's footer, read on the driver after
+    // nanosAsLong is set: `spark.read.parquet` would infer the same schema
+    // with a Spark job on every table read.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(ParquetFooters.schemaAt(spark, path)).parquet(path)
     if (name == "events") df.withColumn("ts", normalizeTs(df)) else df
   }
 

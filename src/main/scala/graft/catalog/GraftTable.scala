@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StringType, StructType}
 
+import graft.io.ParquetFooters
 import graft.plans.OpValue
 
 /** A versioned, insertable table with computed columns, MVCC row visibility,
@@ -94,7 +95,7 @@ final class GraftTable private (
     m.versions.flatMap { e =>
       val mine = e.added.filter(wanted)
       if (mine.isEmpty) Nil
-      else e.schema.map(Seq(_)).getOrElse(footers(mine)((_, f) => footerSchema(f).json))
+      else e.schema.map(Seq(_)).getOrElse(footers(mine)((_, f) => ParquetFooters.schema(spark, f).json))
     }.distinct
       .map(json => DataType.fromJson(json).asInstanceOf[StructType])
       .reduce(mergeSchemas)
@@ -103,15 +104,6 @@ final class GraftTable private (
   private def mergeSchemas(a: StructType, b: StructType): StructType =
     org.apache.spark.sql.GraftSchemas.merge(a, b,
       spark.sessionState.conf.caseSensitiveAnalysis)
-
-  /** Spark schema a footer carries: the schema Spark logged in it, else
-    * the converted parquet schema (as schema inference reads it).
-    */
-  private def footerSchema(f: ParquetMetadata): StructType =
-    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(null, f),
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   private def emptyFrame(m: TableMeta): DataFrame = {
     val storedCols = m.columns.filter(c => c.computedExpr.isEmpty || c.stored)
@@ -357,32 +349,7 @@ final class GraftTable private (
     val v = retryOnConflict {
       val m = meta
       val v = m.currentVersion + 1
-      // primary-key unique constraint (reference partial B-tree index
-      // semantics, index/btree.py: only LIVE rows hold their key, so a
-      // deleted key is immediately reusable). ONE distributed aggregate
-      // over the batch's keys (flag 1) and the live keys (flag 0): a key
-      // held twice is an in-batch duplicate when the batch holds it twice,
-      // else a live conflict; in-batch duplicates sort first. Live keys
-      // with a null part never equi-match, so they stay out. No
-      // driver-side key sets, so constraint checking scales with the table.
-      if (m.primaryKey.nonEmpty) {
-        val pk = m.primaryKey
-        val liveKeys = read().select(pk.map(col): _*)
-          .filter(pk.map(col(_).isNotNull).reduce(_ && _))
-        val dup = rows.select(pk.map(col): _*).withColumn("_new", lit(1L))
-          .unionByName(liveKeys.withColumn("_new", lit(0L)))
-          .groupBy(pk.map(col): _*)
-          .agg(count(lit(1)).as("_n"), sum(col("_new")).as("_new"))
-          .filter(col("_n") > 1 && col("_new") > 0)
-          .orderBy(col("_new").desc)
-          .limit(1).collect()
-        dup.headOption.foreach { r =>
-          val what = if (r.getLong(pk.length + 1) > 1) "Duplicate primary key in inserted rows"
-            else "Duplicate primary key"
-          throw new IllegalArgumentException(s"$what: " +
-            pk.zip(r.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", "))
-        }
-      }
+      if (m.primaryKey.nonEmpty) checkPrimaryKey(m, rows)
       var df = rows
       val stored = m.computedInTopoOrder.filter(_.stored)
       computedCols = stored.map(_.name)
@@ -436,6 +403,109 @@ final class GraftTable private (
       colsWithExcs = excs.map(_._1),
       rows = returned), opened = true)
   }
+
+  /** Primary-key unique constraint (reference partial B-tree index
+    * semantics, index/btree.py: only LIVE rows hold their key, so a deleted
+    * key is immediately reusable). A key the batch holds twice is an
+    * in-batch duplicate, reported before any live conflict; batch keys
+    * with a null part group together, as `groupBy` does, but never
+    * equi-match a live key.
+    *
+    * A batch already on the driver (a local relation of at most
+    * `MaxInlineKeys` rows whose key columns have the table's plain key
+    * types) is checked there: duplicates by grouping its key tuples, live
+    * conflicts by one probe of the live rows in the files whose footer
+    * min/max of the first key column can hold a batch key, and no job at
+    * all when no file can. Any other batch takes ONE distributed aggregate
+    * over its keys (flag 1) and the live keys (flag 0), with no driver-side
+    * key sets, so the check scales with the table: a key held twice is an
+    * in-batch duplicate when the batch holds it twice, else a live
+    * conflict, and in-batch duplicates sort first.
+    */
+  private def checkPrimaryKey(m: TableMeta, rows: DataFrame): Unit = {
+    val pk = m.primaryKey
+    val keys = rows.select(pk.map(col): _*)
+    val local = keys.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.data.size <= MaxInlineKeys &&
+            pk.zip(keys.schema.map(_.dataType)).forall { case (k, t) => plainKey(m, k, t) } =>
+        Some(keys.collect().toSeq.map(_.toSeq))
+      case _ => None
+    }
+    val dup = local match {
+      case Some(batch) => localDuplicate(m, batch, keys.schema.head.dataType)
+      case None =>
+        val liveKeys = read().select(pk.map(col): _*)
+          .filter(pk.map(col(_).isNotNull).reduce(_ && _))
+        keys.withColumn("_new", lit(1L))
+          .unionByName(liveKeys.withColumn("_new", lit(0L)))
+          .groupBy(pk.map(col): _*)
+          .agg(count(lit(1)).as("_n"), sum(col("_new")).as("_new"))
+          .filter(col("_n") > 1 && col("_new") > 0)
+          .orderBy(col("_new").desc)
+          .limit(1).collect()
+          .headOption.map(r => (r.getLong(pk.length + 1) > 1, r.toSeq.take(pk.length)))
+    }
+    dup.foreach { case (inBatch, key) =>
+      val what = if (inBatch) "Duplicate primary key in inserted rows" else "Duplicate primary key"
+      throw new IllegalArgumentException(s"$what: " +
+        pk.zip(key).map { case (k, x) => s"$k=$x" }.mkString(", "))
+    }
+  }
+
+  /** The first duplicate of a driver-held batch of key tuples, flagged
+    * true when in-batch: the tuple held most often when one is held twice,
+    * else a live row's key found by the probe. Files whose footer range of
+    * the first key column (of type `firstType`) can hold no batch key are
+    * never read; the one probe reads the rest, pruned by the key lists, and
+    * each task stops at its first exact tuple hit, so it is one job.
+    */
+  private def localDuplicate(m: TableMeta, batch: Seq[Seq[Any]],
+      firstType: DataType): Option[(Boolean, Seq[Any])] = {
+    val held = batch.groupMapReduce(joinKey)(_ => 1)(_ + _)
+    val most = if (held.isEmpty) 0 else held.values.max
+    if (most > 1) return batch.find(t => held(joinKey(t)) == most).map(true -> _)
+    val open = batch.filterNot(_.contains(null))
+    val files = keyRangeFiles(m, m.activeFiles(m.currentVersion), firstType,
+      open.map(_.head))
+    if (files.isEmpty) return None
+    val pk = m.primaryKey
+    val wanted = open.map(joinKey).toSet
+    val hits = toLogical(readFiles(m, files).filter(col(VMax) === Live), m)
+      .filter(keyListPredicate(pk, open))
+      .select(pk.map(col): _*)
+    hits.mapPartitions(_.filter(r => wanted(joinKey(r.toSeq))).take(1))(
+      org.apache.spark.sql.Encoders.row(hits.schema))
+      .collect().headOption.map(r => false -> r.toSeq)
+  }
+
+  /** The files among `files` with a row group whose footer min/max of the
+    * first primary-key column can hold one of `keys` (that column's non-null
+    * batch values). A row group without stats for the column may hold any;
+    * so may every file when the column's type is not integral.
+    */
+  private def keyRangeFiles(m: TableMeta, files: Seq[String], firstType: DataType,
+      keys: Seq[Any]): Seq[String] =
+    if (keys.isEmpty) Nil
+    else firstType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        val sorted = keys.map(_.asInstanceOf[Number].longValue).sorted.toIndexedSeq
+        def bound(v: Any) = v.asInstanceOf[Number].longValue
+        val store = m.columns.find(_.name == m.primaryKey.head).get.storeName
+        footers(files) { (file, f) =>
+          file -> f.getBlocks.asScala.exists { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == store)
+              .flatMap(c => Option(c.getStatistics)) match {
+              case Some(st) if st.hasNonNullValue =>
+                val i = sorted.search(bound(st.genericGetMin)).insertionPoint
+                i < sorted.length && sorted(i) <= bound(st.genericGetMax)
+              case Some(st) if st.isNumNullsSet => st.getNumNulls < b.getRowCount
+              case _ => true
+            }
+          }
+        }.collect { case (file, true) => file }
+      case _ => files
+    }
 
   /** The tail every DML op runs once after its commit, outside the retry
     * body (a maintenance-side conflict must never replay a committed op):
@@ -531,13 +601,7 @@ final class GraftTable private (
     * read as it is, with no job.
     */
   private[catalog] def inlineKeys(keys: DataFrame, keyCol: String): Option[Seq[Any]] = {
-    val t = keys.schema.head.dataType
-    val plain = t match {
-      case LongType | IntegerType | ShortType | ByteType | StringType => true
-      case _ => false
-    }
-    if (!plain || !meta.liveColumns.exists(c =>
-        c.name == keyCol && DataType.fromDDL(c.dataType) == t)) None
+    if (!plainKey(meta, keyCol, keys.schema.head.dataType)) None
     else (keys.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         GraftTable.cappedKeys(keys.collect().iterator.map(_.get(0)))
@@ -547,6 +611,13 @@ final class GraftTable private (
             2, true)
     }).map(_.toSeq)
   }
+
+  /** `t` is a plain key type (integral or string) equal to column `name`'s */
+  private def plainKey(m: TableMeta, name: String, t: DataType): Boolean =
+    (t match {
+      case LongType | IntegerType | ShortType | ByteType | StringType => true
+      case _ => false
+    }) && m.liveColumns.exists(c => c.name == name && DataType.fromDDL(c.dataType) == t)
 
   /** deleteByKeys over `keys`, inline when `inline` holds them. */
   private[catalog] def deleteKeysStatus(keys: DataFrame, keyCol: String,
@@ -758,19 +829,6 @@ final class GraftTable private (
       if (vals.isEmpty) lit(false) else col(k).isInCollection(vals)
     }.reduce(_ && _)
   }
-
-  /** A driver-side key tuple with the join's equality: binary values
-    * compare by content, -0.0 equals 0.0 and NaN equals NaN (Spark
-    * normalizes floating-point join keys the same way).
-    */
-  private def joinKey(t: Seq[Any]): Seq[Any] = t.map {
-    case b: Array[Byte] => b.toSeq
-    case d: Double => if (d.isNaN) JoinKeyNaN else if (d == 0.0) 0.0 else d
-    case f: Float => if (f.isNaN) JoinKeyNaN else if (f == 0.0f) 0.0f else f
-    case v => v
-  }
-
-  private case object JoinKeyNaN
 
   /** Runs the COW update. Returns the status plus the set of update key
     * tuples that matched a live row (the upsert leg's complement). The ONE
@@ -1764,20 +1822,9 @@ final class GraftTable private (
     v
   }
 
-  /** `f` over each file's parquet footer, read on the driver — no Spark
-    * job. All files open under one Hadoop conf and one set of read options:
-    * building them per file re-parses the Hadoop configuration every time.
-    */
-  private def footers[A](files: Seq[String])(f: (String, ParquetMetadata) => A): Seq[A] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    files.map { file =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(file), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
-      try f(file, r.getFooter) finally r.close()
-    }
-  }
+  /** `f` over each file's parquet footer, read on the driver — no Spark job */
+  private def footers[A](files: Seq[String])(f: (String, ParquetMetadata) => A): Seq[A] =
+    ParquetFooters.map(spark, files)(f)
 
   /** bytes of the files `df` scans, from the listing its read already made */
   private def scannedBytes(df: DataFrame): Long =
@@ -1973,6 +2020,19 @@ object GraftTable {
     */
   private final case class Reopen(cols: Seq[String], cascade: Boolean,
       values: DataFrame => DataFrame)
+
+  /** A driver-side key tuple with the join's equality: binary values
+    * compare by content, -0.0 equals 0.0 and NaN equals NaN (Spark
+    * normalizes floating-point join keys the same way).
+    */
+  private def joinKey(t: Seq[Any]): Seq[Any] = t.map {
+    case b: Array[Byte] => b.toSeq
+    case d: Double => if (d.isNaN) JoinKeyNaN else if (d == 0.0) 0.0 else d
+    case f: Float => if (f.isNaN) JoinKeyNaN else if (f == 0.0f) 0.0f else f
+    case v => v
+  }
+
+  private case object JoinKeyNaN
 
   /** Ceiling on a `batchUpdate` frame: its rows are collected to the driver. */
   val MaxBatchUpdateRows = 100000

@@ -3586,13 +3586,14 @@ object Extras {
         // its end + 30 min gap — the trailing open sessions never emit.
         import org.apache.spark.sql.expressions.Window
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val events = s"$dir/events.parquet"
+        val schema = graft.io.ParquetFooters.schemaAt(s, events)
         val tsNorm = schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             timestamp_micros(expr("ts div 1000"))
           case _ => col("ts").cast("timestamp")
         }
-        val ev = s.read.parquet(s"$dir/events.parquet")
+        val ev = s.read.schema(schema).parquet(events)
           .filter(col("user_id") < 8)
           .select(col("user_id").cast("long").as("user_id"),
             timestamp_millis(unix_millis(tsNorm)).as("ts"))

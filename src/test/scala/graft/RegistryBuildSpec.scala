@@ -39,4 +39,16 @@ class RegistryBuildSpec extends AnyFunSuite {
     assert(spark.streams.active.isEmpty,
       spark.streams.active.map(_.name).mkString("streams still active: ", ", ", ""))
   }
+
+  test("every corpus table reads its schema from the footer, with no Spark job") {
+    assume(new java.io.File(s"$sfDir/lineitem.parquet").exists())
+    Tables.names.foreach { n =>
+      val jobs = TestSpark.jobsDuring(Tables(spark, sfDir, n))
+      assert(jobs.isEmpty, s"$n: building the read ran ${jobs.size} jobs")
+      val inferred = spark.read.parquet(s"$sfDir/$n.parquet")
+      val want = if (n == "events") inferred.withColumn("ts", Tables.normalizeTs(inferred))
+        else inferred
+      assert(Tables(spark, sfDir, n).schema == want.schema, n)
+    }
+  }
 }

@@ -24,7 +24,7 @@ class CommitSchemaSpec extends AnyFunSuite {
   private def docs(ids: Seq[Long]): DataFrame =
     ids.map(i => (i, s"text $i ${i % 5}", vec(i))).toDF("id", "text", "emb")
 
-  test("an insert into a PK table with computed columns and an HNSW index runs at most 4 jobs") {
+  private def budgetTable(): GraftTable = {
     val t = GraftTable.create(spark, freshCatalog(), "budget", Seq(
       ColumnDef("id", "bigint"), ColumnDef("text", "string"),
       ColumnDef("emb", "array<double>"),
@@ -34,13 +34,32 @@ class CommitSchemaSpec extends AnyFunSuite {
     t.insert(docs(0L until 500L))
     t.createHnswIndex("e", "emb", "id", shards = 2)
     t.insert(docs(500L until 600L)) // warm
+    t
+  }
+
+  test("an insert of a local batch above every live key range runs at most 2 jobs") {
+    val t = budgetTable()
     assert(TestSpark.jobsDuring(t.read()).isEmpty, "building read() ran a job")
     val jobs = TestSpark.jobsDuring(t.insert(docs(600L until 700L)))
-    assert(jobs.size <= 4, s"insert ran ${jobs.size} jobs")
+    assert(jobs.size <= 2, s"insert ran ${jobs.size} jobs")
     assert(t.meta.indexes.head.indexedThrough == t.currentVersion)
     assert(t.read().count() == 700L)
     assert(t.read().where("id = 650").select("n_chars", "bucket").as[(Int, Long)].head() ==
       ("text 650 0".length, 650L % 7))
+    // an in-batch duplicate is found on the driver
+    val dup = TestSpark.jobsDuring(intercept[IllegalArgumentException](
+      t.insert(docs(Seq(900L, 901L, 900L)))))
+    assert(dup.isEmpty, s"the in-batch duplicate check ran ${dup.size} jobs")
+  }
+
+  test("an insert of a local batch that overlaps a live file runs at most 3 jobs") {
+    val t = budgetTable()
+    t.delete("id = 250")
+    val jobs = TestSpark.jobsDuring(t.insert(docs(Seq(250L) ++ (700L until 799L))))
+    assert(jobs.size <= 3, s"insert ran ${jobs.size} jobs")
+    assert(t.read().count() == 699L)
+    val e = intercept[IllegalArgumentException](t.insert(docs(Seq(800L, 251L))))
+    assert(e.getMessage == "Duplicate primary key: id=251", e.getMessage)
   }
 
   test("an in-batch duplicate is reported before a live conflict") {
@@ -60,6 +79,103 @@ class CommitSchemaSpec extends AnyFunSuite {
     c.insert(Seq((1L, null: String), (1L, "q")).toDF("a", "b"))
     assert(c.read().count() == 3L)
     assert(c.meta.currentVersion == 2L)
+  }
+
+  /** A primary-key case: the table's columns and key, the set-up ops, and
+    * the batches inserted in turn, each with the verdict it must get ("ok",
+    * or the error message; one ending in "=" is a prefix).
+    */
+  private final case class PkCase(name: String, columns: Seq[ColumnDef], pk: Seq[String],
+      setup: Seq[GraftTable => Any], tries: Seq[(DataFrame, String)])
+
+  /** Runs `c` twice, each time on a fresh table: once with every batch
+    * local (checked on the driver when its key types allow) and once with
+    * every batch distributed (the aggregate). Both runs must give the
+    * listed verdicts and end with the same rows.
+    */
+  private def checkVerdicts(c: PkCase): Unit = {
+    val ends = Seq(false, true).map { distributed =>
+      val t = GraftTable.create(spark, freshCatalog(), c.name, c.columns, primaryKey = c.pk)
+      c.setup.foreach(_(t))
+      c.tries.zipWithIndex.foreach { case ((batch, want), i) =>
+        val b = if (distributed) batch.repartition(2) else batch
+        val got = try { t.insert(b); "ok" } catch {
+          case e: IllegalArgumentException => e.getMessage
+        }
+        val where = s"${c.name} try $i (${if (distributed) "distributed" else "local"})"
+        if (want.endsWith("=")) assert(got.startsWith(want), s"$where: $got")
+        else assert(got == want, s"$where: $got")
+      }
+      t.read().collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }.mkString("|")).toSeq.sorted
+    }
+    assert(ends(0) == ends(1), c.name)
+  }
+
+  private val idV = Seq(ColumnDef("id", "bigint"), ColumnDef("v", "string"))
+  private def idRows(ids: Long*): DataFrame = ids.map(i => (i, s"v$i")).toDF("id", "v")
+
+  test("in-batch duplicates get the aggregate's verdicts: nulls, signed zeros, NaN, binary") {
+    checkVerdicts(PkCase("nulls", idV, Seq("id"), Seq(_.insert(idRows(1L, 2L))), Seq(
+      Seq((None: Option[Long], "a"), (None: Option[Long], "b")).toDF("id", "v") ->
+        "Duplicate primary key in inserted rows: id=null",
+      Seq((Option(3L), "a"), (None: Option[Long], "b")).toDF("id", "v") -> "ok")))
+    val ab = Seq(ColumnDef("a", "bigint"), ColumnDef("b", "string"))
+    checkVerdicts(PkCase("null_part", ab, Seq("a", "b"),
+      Seq(_.insert(Seq((1L, null: String)).toDF("a", "b"))), Seq(
+        Seq((1L, null: String), (1L, null: String)).toDF("a", "b") ->
+          "Duplicate primary key in inserted rows: a=1, b=null",
+        Seq((1L, null: String), (1L, "q")).toDF("a", "b") -> "ok")))
+    val xv = Seq(ColumnDef("x", "double"), ColumnDef("v", "string"))
+    checkVerdicts(PkCase("zeros_nan", xv, Seq("x"),
+      Seq(_.insert(Seq((1.0, "a")).toDF("x", "v"))), Seq(
+        Seq((-0.0, "a"), (0.0, "b")).toDF("x", "v") ->
+          "Duplicate primary key in inserted rows: x=0.0",
+        Seq((Double.NaN, "a"), (Double.NaN, "b")).toDF("x", "v") ->
+          "Duplicate primary key in inserted rows: x=NaN",
+        Seq((-0.0, "a"), (Double.NaN, "b")).toDF("x", "v") -> "ok",
+        Seq((0.0, "c")).toDF("x", "v") -> "Duplicate primary key: x=0.0")))
+    val bv = Seq(ColumnDef("k", "binary"), ColumnDef("v", "string"))
+    checkVerdicts(PkCase("binary", bv, Seq("k"),
+      Seq(_.insert(Seq((Array[Byte](1, 2), "a")).toDF("k", "v"))), Seq(
+        Seq((Array[Byte](3), "a"), (Array[Byte](3), "b")).toDF("k", "v") ->
+          "Duplicate primary key in inserted rows: k=",
+        Seq((Array[Byte](1, 2), "c")).toDF("k", "v") -> "Duplicate primary key: k=",
+        Seq((Array[Byte](1), "c")).toDF("k", "v") -> "ok")))
+  }
+
+  test("live conflicts get the aggregate's verdicts at file-range edges, after DML, on composite keys") {
+    // ids 10..20 and 40..50 land in files whose footer ranges end on them
+    checkVerdicts(PkCase("edges", idV, Seq("id"),
+      Seq(_.insert(idRows(10L to 20L: _*)), _.insert(idRows(40L to 50L: _*))), Seq(
+        idRows(30L, 10L) -> "Duplicate primary key: id=10",
+        idRows(20L, 31L) -> "Duplicate primary key: id=20",
+        idRows(40L) -> "Duplicate primary key: id=40",
+        idRows(50L, 51L) -> "Duplicate primary key: id=50",
+        idRows(9L, 21L, 39L) -> "ok")))
+    // a deleted key is free again, also once a later update has rewritten
+    // its file (the closed image rides along); an updated key stays live
+    checkVerdicts(PkCase("closed", idV, Seq("id"), Seq(
+      _.insert(idRows(10L to 20L: _*)), _.delete("id = 15"),
+      _.update(Map("v" -> "'u'"), "id = 14"), _.delete("id = 12")), Seq(
+        idRows(15L, 12L) -> "ok",
+        idRows(14L) -> "Duplicate primary key: id=14",
+        idRows(16L) -> "Duplicate primary key: id=16")))
+    // per-column key lists over-select on a composite key: (1,y) and (2,x)
+    // are not live though every part is
+    val ab = Seq(ColumnDef("a", "bigint"), ColumnDef("b", "string"))
+    checkVerdicts(PkCase("composite", ab, Seq("a", "b"),
+      Seq(_.insert(Seq((1L, "x"), (2L, "y")).toDF("a", "b"))), Seq(
+        Seq((1L, "y"), (2L, "x")).toDF("a", "b") -> "ok",
+        Seq((3L, "z"), (2L, "y")).toDF("a", "b") -> "Duplicate primary key: a=2, b=y")))
+    // a string first key column prunes no file: the probe still finds it
+    val sv = Seq(ColumnDef("s", "string"), ColumnDef("n", "bigint"))
+    checkVerdicts(PkCase("string_key", sv, Seq("s", "n"),
+      Seq(_.insert(Seq(("k1", 1L), ("k2", 2L)).toDF("s", "n"))), Seq(
+        Seq(("k3", 1L), ("k2", 2L)).toDF("s", "n") -> "Duplicate primary key: s=k2, n=2",
+        Seq(("k2", 1L), ("k1", 2L)).toDF("s", "n") -> "ok")))
   }
 
   /** A table taken through add, drop and rename of columns, with files on
